@@ -1771,6 +1771,22 @@ FROM changes GROUP BY conv_id
 _IDEMP_MAX_EPOCHS = 16
 
 
+def _check_idempotent_cap(n_epochs: int, cap: int) -> None:
+    """The ``cdc_idempotent_replay`` oracle enumerates every one of the
+    derived changelog's ``n_epochs`` epochs while the query replays at most
+    ``cap``; above the cap the two would disagree silently, so fail loudly
+    instead (checked at import)."""
+    if n_epochs > cap:
+        raise ValueError(
+            f"_N_EPOCHS={n_epochs} exceeds _IDEMP_MAX_EPOCHS={cap}: the "
+            f"idempotent-replay oracle enumerates all epochs but the query "
+            f"samples only {cap}; raise the cap or sample the oracle too"
+        )
+
+
+_check_idempotent_cap(_N_EPOCHS, _IDEMP_MAX_EPOCHS)
+
+
 def _idempotent_epoch_sample(
     epochs: list[int], cap: int = _IDEMP_MAX_EPOCHS
 ) -> list[int]:

@@ -222,6 +222,96 @@ def _fold_epochs(
     return sorted(rest), wm
 
 
+#: build-and-CAS attempts :meth:`SnapshotTable._commit` makes before it
+#: gives up on a table other writers keep moving
+_COMMIT_ATTEMPTS = 10
+
+#: per-file manifest maps a commit carries forward from its parent
+_MANIFEST_KEYS = ("file_sizes", "file_stats", "file_key_digests", "file_rows")
+
+
+def _durable_write(path: str, text: str, exclusive: bool = False) -> None:
+    """Publish ``text`` at ``path`` atomically and durably: write a private
+    tmp file, fsync it, then move it into place — ``os.link`` when
+    ``exclusive`` (an atomic create-exclusive whose target appears fully
+    formed; ``FileExistsError`` if ``path`` exists), else ``os.rename``
+    (atomic replace)."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    if not exclusive:
+        os.rename(tmp, path)
+        return
+    try:
+        os.link(tmp, path)
+    finally:
+        os.unlink(tmp)
+
+
+def _append_buckets(buckets: dict, added: dict) -> dict:
+    """A copy of the ``buckets`` map with ``added`` files appended per
+    bucket (files already listed are not repeated). Appends rebase onto
+    any concurrent commit: LWW layering stays correct over it."""
+    out = {b: list(fs) for b, fs in buckets.items()}
+    for b, fs in added.items():
+        have = set(out.get(b, ()))
+        out[b] = out.get(b, []) + [f for f in fs if f not in have]
+    return out
+
+
+def _swap_buckets(cur: dict, inputs_by_bucket: dict, outputs: dict) -> dict:
+    """``cur``'s bucket map with each rewritten bucket's input files
+    swapped for its rewrite ``outputs`` (a bucket with no output empties).
+    Raises :class:`ConcurrentCommitError` when a concurrent commit changed
+    a rewritten bucket's file set: the rewrite no longer covers it."""
+    out = {b: list(fs) for b, fs in cur["buckets"].items()}
+    for b, inputs in inputs_by_bucket.items():
+        if set(out.get(b, ())) != inputs:
+            raise ConcurrentCommitError(
+                f"bucket {b} was rewritten by a concurrent commit; re-run "
+                f"against the new state"
+            )
+        if b in outputs:
+            out[b] = outputs[b]
+        else:
+            out.pop(b, None)
+    return out
+
+
+def _with_epoch(
+    cur: dict, epoch_key: str, schema: T.StructType, q_files: list | None
+) -> dict:
+    """The snapshot fields an epoch commit changes on top of ``cur``: the
+    epoch folded into the commit log, ``schema`` merged into cur's (minus
+    the names cur has dropped or renamed away — a concurrent
+    drop_column/rename_column wins over the epoch's schema), and the
+    epoch's quarantine files registered."""
+    folded, watermarks = _fold_epochs(
+        {str(e) for e in cur["committed_epochs"]} | {epoch_key},
+        cur.get("epoch_watermarks", {}),
+    )
+    hidden = set(cur.get("dropped_columns", [])) | {
+        o for olds in cur.get("column_aliases", {}).values() for o in olds
+    }
+    out = {
+        "schema": merge_schemas(
+            T.StructType.fromJson(cur["schema"]),
+            T.StructType([f for f in schema.fields if f.name not in hidden]),
+            allow_widening=bool(cur.get("type_widening", False)),
+        ).jsonValue(),
+        "committed_epochs": folded,
+        "epoch_watermarks": watermarks,
+    }
+    if q_files:
+        out["quarantine_files"] = {
+            **cur.get("quarantine_files", {}),
+            epoch_key: list(q_files),
+        }
+    return out
+
+
 def _changes_file_map(
     path: str,
     snap: dict,
@@ -648,12 +738,93 @@ class SnapshotTable(LakeTable):
         with open(os.path.join(self.path, "snapshots", name)) as f:
             return json.load(f)
 
-    def _write_snapshot(self, snap: dict, operation: str | None = None) -> None:
+    def _commit(self, operation: str, build, seed: dict | None = None) -> dict | None:
+        """The one commit primitive every table operation goes through:
+        build the next snapshot, CAS-write it (:meth:`_write_snapshot`),
+        and on :class:`ConcurrentCommitError` reload the current snapshot
+        and build again — at most ``_COMMIT_ATTEMPTS`` times.
+
+        ``build(cur)`` contract:
+
+        * ``cur`` is the snapshot to commit on top of, always
+          ``self._snapshot``: the handle's own on the first attempt (no
+          reload on the happy path), the freshly reloaded one on a retry.
+        * It returns the new snapshot's content (``version`` and ``parent``
+          are stamped here), or None when, against ``cur``, there is
+          nothing to commit — the op's effect is already there (a replayed
+          epoch, a policy already set). ``_commit`` then returns None.
+        * A build that is only valid against the snapshot it was planned
+          on (a CoW rewrite, a reshard, a restore, a schema change checked
+          against an exact schema) raises ``ConcurrentCommitError`` itself
+          (:meth:`_commit_pinned`); that propagates with no retry.
+        * Validation that depends on table state belongs inside ``build``,
+          so a retry re-validates against the reloaded snapshot. A build
+          may run more than once: files a discarded attempt wrote are
+          orphans for ``vacuum``, like a crash between write and commit.
+
+        ``seed`` lends a further snapshot's per-file manifest entries to
+        the stats carry-forward (``restore``, ``fast_forward``), so files
+        the commit re-adopts need no footer read. Returns the committed
+        snapshot, which is now ``self._snapshot``.
+        """
+        for _ in range(_COMMIT_ATTEMPTS):
+            cur = self._snapshot
+            snap = build(cur)
+            if snap is None:
+                return None
+            snap["version"] = cur["version"] + 1
+            snap["parent"] = cur["version"]
+            prev = cur
+            if seed is not None:
+                prev = {
+                    **cur,
+                    **{
+                        k: {**seed.get(k, {}), **cur.get(k, {})}
+                        for k in _MANIFEST_KEYS
+                    },
+                }
+            try:
+                self._write_snapshot(snap, operation, prev)
+            except ConcurrentCommitError:
+                self._snapshot = self._read_current_snapshot()
+                continue
+            self._snapshot = snap
+            return snap
+        raise ConcurrentCommitError(
+            f"gave up committing {operation} after {_COMMIT_ATTEMPTS} attempts"
+        )
+
+    def _commit_pinned(
+        self, operation: str, snap: dict, seed: dict | None = None
+    ) -> dict:
+        """:meth:`_commit` of ``snap``, planned on ``self._snapshot`` and
+        valid only against it (a reshard, a restore, a fork adoption, a
+        schema change validated against the exact schema): a concurrent
+        commit raises :class:`ConcurrentCommitError` — reload and re-run
+        the operation — instead of rebasing."""
+        v0 = self._snapshot["version"]
+
+        def build(cur: dict) -> dict:
+            if cur["version"] != v0:
+                raise ConcurrentCommitError(
+                    f"{operation} was planned on snapshot version {v0} but a "
+                    f"concurrent writer moved the table to {cur['version']}; "
+                    f"reload and re-run"
+                )
+            return snap
+
+        return self._commit(operation, build, seed)
+
+    def _write_snapshot(
+        self, snap: dict, operation: str | None = None, prev: dict | None = None
+    ) -> None:
         """Optimistic-concurrency snapshot commit (version CAS + helping).
 
         ``operation`` stamps the commit with the op that produced it (the
         Delta ``DESCRIBE HISTORY`` *operation* column / Iceberg snapshot
-        ``operation`` summary analog) — served by :meth:`history`.
+        ``operation`` summary analog) — served by :meth:`history`. ``prev``
+        is the parent snapshot the manifest carries forward from (None for
+        a root snapshot).
 
         Two writers racing on the same parent must not silently last-write-
         win (the pre-round-4 unconditional ``_CURRENT`` rename would lose
@@ -665,8 +836,8 @@ class SnapshotTable(LakeTable):
            link is an atomic create-EXCLUSIVE whose target appears fully
            formed. Exactly one writer per version N can win; the loser gets
            ``EEXIST`` and raises :class:`ConcurrentCommitError` (reload the
-           new current snapshot and rebuild/retry the commit — MoR merges do
-           this automatically, see ``merge_changes``).
+           new current snapshot and rebuild/retry the commit — :meth:`_commit`
+           does this for every operation).
         3. Flip the ``_CURRENT`` pointer to vN — serialized under an
            ``flock`` and only ever FORWARD (a stalled winner of v5 must not
            regress the pointer after someone advanced it to v6).
@@ -678,7 +849,7 @@ class SnapshotTable(LakeTable):
         the version sequence (lock-free helping; the slow winner's own later
         flip is idempotent — same name, forward-only).
         """
-        self._enrich_snapshot(snap)
+        self._enrich_snapshot(snap, prev)
         # wall-clock commit stamp (Iceberg snapshot timestamp-ms analog):
         # set at WRITE time, not merge-build time, so a staged epoch gets its
         # publish instant and a rebase retry gets its winning attempt's —
@@ -688,30 +859,28 @@ class SnapshotTable(LakeTable):
         if operation is not None:
             snap["operation"] = operation
         name = f"v{snap['version']:08d}.json"
-        snap_path = os.path.join(self.path, "snapshots", name)
-        tmp = snap_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            os.link(tmp, snap_path)  # atomic version CAS
+            _durable_write(
+                os.path.join(self.path, "snapshots", name),
+                json.dumps(snap),
+                exclusive=True,  # atomic version CAS
+            )
         except FileExistsError:
-            os.unlink(tmp)
             # another writer owns version N; help a crashed winner forward
             self._flip_current_forward(name, snap["version"], help_only=True)
             raise ConcurrentCommitError(
                 f"snapshot version {snap['version']} was committed by a "
                 f"concurrent writer; reload the current snapshot and retry"
             ) from None
-        os.unlink(tmp)
         self._flip_current_forward(name, snap["version"])
 
-    def _enrich_snapshot(self, snap: dict) -> None:
+    def _enrich_snapshot(self, snap: dict, prev: dict | None) -> None:
         """Attach manifest-level per-file metadata to a snapshot dict before
         it is persisted (shared by committed snapshots and WAP staged
         snapshots, so an audit read of a staged state gets the same data
-        skipping and byte-weighted branch grouping a published one does)."""
+        skipping and byte-weighted branch grouping a published one does).
+        ``prev`` is the parent snapshot (None for a root): its per-file
+        entries carry forward and its file set bounds ``added_files``."""
         # Persist per-file byte sizes alongside the file lists: the MoR read
         # groups buckets into branch tasks by CUMULATIVE BYTES (not bucket
         # count), and at 100 TB a stat() per file per read would be an
@@ -728,11 +897,11 @@ class SnapshotTable(LakeTable):
         # commit fsync; on a real cluster the write tasks would report these
         # with the commit, exactly as Iceberg manifests do). A file without
         # usable stats maps to None and is never pruned.
-        prev = getattr(self, "_snapshot", None)
-        prev_sizes: dict[str, int] = (prev or {}).get("file_sizes", {})
-        prev_stats: dict = (prev or {}).get("file_stats", {})
-        prev_digests: dict = (prev or {}).get("file_key_digests", {})
-        prev_rows: dict = (prev or {}).get("file_rows", {})
+        prev = prev or {}
+        prev_sizes: dict[str, int] = prev.get("file_sizes", {})
+        prev_stats: dict = prev.get("file_stats", {})
+        prev_digests: dict = prev.get("file_key_digests", {})
+        prev_rows: dict = prev.get("file_rows", {})
         order_col = (snap.get("order") or [None])[0]
         key_col = (snap.get("key") or [None])[0]
         sizes: dict[str, int] = {}
@@ -780,9 +949,7 @@ class SnapshotTable(LakeTable):
         # walkers (read_changes) load O(files added by this commit) per
         # snapshot instead of the full table file list — at 10^4 epochs the
         # difference between kilobytes and gigabytes of snapshot JSON.
-        prev_all = (
-            {f for fs in prev["buckets"].values() for f in fs} if prev else set()
-        )
+        prev_all = {f for fs in prev.get("buckets", {}).values() for f in fs}
         snap["added_files"] = sorted(
             {
                 f
@@ -821,12 +988,47 @@ class SnapshotTable(LakeTable):
                 cur_version = -1
             if cur_version >= version:
                 return  # already at/past this version (helped, or stalled)
-            cur_tmp = os.path.join(self.path, _CURRENT + f".tmp-{uuid.uuid4().hex[:8]}")
-            with open(cur_tmp, "w") as f:
-                f.write(name)
-                f.flush()
-                os.fsync(f.fileno())
-            os.rename(cur_tmp, os.path.join(self.path, _CURRENT))  # atomic
+            _durable_write(os.path.join(self.path, _CURRENT), name)
+
+    def _bucket_outputs(self, rel_dir: str) -> dict[str, list[str]]:
+        """``{bucket: sorted relative parquet paths}`` of a
+        ``partitionBy("_bucket", …)`` write under ``rel_dir`` — nested
+        partition dirs included (``compact(cluster_files>1)`` adds
+        ``_slice``). Buckets without a file are absent; so is everything
+        when nothing was written."""
+        root = os.path.join(self.path, rel_dir)
+        out: dict[str, list[str]] = {}
+        for entry in os.listdir(root) if os.path.isdir(root) else []:
+            if not entry.startswith("_bucket="):
+                continue
+            files = sorted(
+                os.path.relpath(os.path.join(d, fn), self.path)
+                for d, _dirs, fns in os.walk(os.path.join(root, entry))
+                for fn in fns
+                if fn.endswith(".parquet")
+            )
+            if files:
+                out[entry.split("=", 1)[1]] = files
+        return out
+
+    def _write_buckets(
+        self, df: DataFrame, origin: str, *sub_partitions: str
+    ) -> dict[str, list[str]]:
+        """Write ``df`` (carrying ``_bucket``) partitioned per bucket into a
+        fresh ``data/<origin>-<id>`` dir; returns :meth:`_bucket_outputs`."""
+        rel_dir = os.path.join("data", f"{origin}-{uuid.uuid4().hex[:8]}")
+        df.write.partitionBy("_bucket", *sub_partitions).mode("overwrite").parquet(
+            os.path.join(self.path, rel_dir)
+        )
+        return self._bucket_outputs(rel_dir)
+
+    def _bucket_inputs(self, buckets) -> dict[str, set[str]]:
+        """``{bucket: current file set}`` — what a rewrite of ``buckets``
+        reads, for :func:`_swap_buckets` to check at commit."""
+        return {
+            str(b): set(self._snapshot["buckets"].get(str(b), []))
+            for b in buckets
+        }
 
     # ----------------------------------------------------------- public API
     @property
@@ -861,25 +1063,20 @@ class SnapshotTable(LakeTable):
         """Flip the evolution policy — Delta's table-level
         ``mergeSchema`` governance toggle. Safe in both directions
         mid-life (strictness gates FUTURE batches only; stored data is
-        untouched); committed via the usual version CAS. Returns the new
+        untouched); rebases over concurrent commits. Returns the new
         version."""
         if policy not in ("additive", "strict"):
             raise ValueError(
                 f"set_schema_evolution: policy must be 'additive' or "
                 f"'strict', got {policy!r}"
             )
-        cur = self._snapshot
-        if cur.get("schema_evolution", "additive") == policy:
-            return int(cur["version"])
-        snap = {
-            **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
-            "schema_evolution": policy,
-        }
-        self._write_snapshot(snap, operation="set_schema_evolution")
-        self._snapshot = snap
-        return int(snap["version"])
+        self._commit(
+            "set_schema_evolution",
+            lambda cur: None
+            if cur.get("schema_evolution", "additive") == policy
+            else {**cur, "schema_evolution": policy},
+        )
+        return int(self._snapshot["version"])
 
     def _enforce_evolution_policy(self, incoming: T.StructType) -> None:
         """Reject unknown batch columns under the strict policy. Runs on
@@ -1557,8 +1754,8 @@ class SnapshotTable(LakeTable):
         snapshot commits as-is through the normal version-CAS. If other
         commits landed since staging, merge-on-read stages REBASE (their
         delta files are pure appends: graft onto the winner's bucket lists,
-        re-fold the epoch log, re-merge the schema — same protocol as the
-        in-merge rebase loop); copy-on-write stages raise
+        re-fold the epoch log, re-merge the schema — the same rebuild a
+        conflicting ``merge_changes`` commit does); copy-on-write stages raise
         :class:`ConcurrentCommitError` (their rewrite is only valid against
         the exact parent file set). Publishing an epoch something else
         already committed is a no-op either way (exactly-once holds across
@@ -1567,86 +1764,47 @@ class SnapshotTable(LakeTable):
         epoch = staged["staged_epoch"]
         a, sk, dl = staged.get("staged_counts", [0, 0, 0])
         mx = staged.get("staged_max_lsn")
-        mor = staged.get("staged_mode") == "mor"
         self._snapshot = self._read_current_snapshot()
-        for _attempt in range(10):
+
+        def build(cur: dict) -> dict | None:
             if self.is_epoch_committed(epoch):
-                os.remove(self._staged_path(ref))
-                return MergeStats(epoch, 0, 0, 0, None, was_noop=True)
-            cur_v = self._snapshot["version"]
-            if cur_v == staged["staged_parent"]:
-                snap = {
+                return None
+            if cur["version"] == staged["staged_parent"]:
+                return {
                     k: v for k, v in staged.items() if not k.startswith("staged_")
                 }
-            elif not mor:
+            if staged.get("staged_mode") != "mor":
                 raise ConcurrentCommitError(
                     f"staged CoW epoch {epoch!r} was built on version "
-                    f"{staged['staged_parent']} but the table is at {cur_v}; "
-                    f"abort_staged and re-merge"
+                    f"{staged['staged_parent']} but the table is at "
+                    f"{cur['version']}; abort_staged and re-merge"
                 )
-            elif int(self._snapshot["n_buckets"]) != int(staged["n_buckets"]):
+            if int(cur["n_buckets"]) != int(staged["n_buckets"]):
                 # a rebucket() landed between stage and publish: the staged
                 # deltas are bucketed under the OLD layout and cannot graft
                 raise ConcurrentCommitError(
                     f"staged epoch {epoch!r} was bucketed with n_buckets="
                     f"{staged['n_buckets']} but the table was resharded to "
-                    f"{self._snapshot['n_buckets']}; abort_staged and re-merge"
+                    f"{cur['n_buckets']}; abort_staged and re-merge"
                 )
-            else:
-                new_buckets = {
-                    b: list(fs) for b, fs in self._snapshot["buckets"].items()
-                }
-                for b, fs in staged.get("staged_added", {}).items():
-                    have = set(new_buckets.get(b, []))
-                    new_buckets[b] = new_buckets.get(b, []) + [
-                        f for f in fs if f not in have
-                    ]
-                extras = {str(e) for e in self._snapshot["committed_epochs"]}
-                extras.add(epoch)
-                folded, wms = _fold_epochs(
-                    extras, self._snapshot.get("epoch_watermarks", {})
-                )
-                hidden = set(self._snapshot.get("dropped_columns", [])) | {
-                    o
-                    for olds in self._snapshot.get("column_aliases", {}).values()
-                    for o in olds
-                }
-                staged_schema = T.StructType(
-                    [
-                        f
-                        for f in T.StructType.fromJson(staged["schema"]).fields
-                        if f.name not in hidden
-                    ]
-                )
-                snap = {
-                    **self._snapshot,
-                    "version": cur_v + 1,
-                    "parent": cur_v,
-                    "schema": merge_schemas(
-                        self.schema,
-                        staged_schema,
-                        allow_widening=self.type_widening,
-                    ).jsonValue(),
-                    "buckets": new_buckets,
-                    "committed_epochs": folded,
-                    "epoch_watermarks": wms,
-                }
-                if staged.get("staged_quarantine"):
-                    snap["quarantine_files"] = {
-                        **self._snapshot.get("quarantine_files", {}),
-                        epoch: staged["staged_quarantine"],
-                    }
-            try:
-                self._write_snapshot(snap, operation="publish_staged")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            os.remove(self._staged_path(ref))
-            return MergeStats(epoch, a, sk, dl, mx, was_noop=False)
-        raise ConcurrentCommitError(
-            f"gave up publishing staged epoch {epoch!r} after 10 rebases"
-        )
+            return {
+                **cur,
+                "buckets": _append_buckets(
+                    cur["buckets"], staged.get("staged_added", {})
+                ),
+                **_with_epoch(
+                    cur,
+                    epoch,
+                    T.StructType.fromJson(staged["schema"]),
+                    staged.get("staged_quarantine"),
+                ),
+            }
+
+        committed = self._commit("publish_staged", build)
+        os.remove(self._staged_path(ref))
+        if committed is None:
+            return MergeStats(epoch, 0, 0, 0, None, was_noop=True)
+        return MergeStats(epoch, a, sk, dl, mx, was_noop=False)
 
     def abort_staged(self, ref: str) -> int:
         """Discard a staged epoch (the audit failed): delete its data and
@@ -1695,21 +1853,14 @@ class SnapshotTable(LakeTable):
             raise ValueError(f"version {v} does not exist (expired or never committed)")
         refs = os.path.join(self.path, "refs")
         os.makedirs(refs, exist_ok=True)
-        p = os.path.join(refs, f"{name}.json")
-        tmp = p + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "version": v}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        if replace:
-            os.rename(tmp, p)
-        else:
-            try:
-                os.link(tmp, p)
-            except FileExistsError:
-                os.unlink(tmp)
-                raise ValueError(f"tag {name!r} already exists") from None
-            os.unlink(tmp)
+        try:
+            _durable_write(
+                os.path.join(refs, f"{name}.json"),
+                json.dumps({"name": name, "version": v}),
+                exclusive=not replace,
+            )
+        except FileExistsError:
+            raise ValueError(f"tag {name!r} already exists") from None
         return v
 
     def tags(self) -> dict[str, int]:
@@ -2722,10 +2873,7 @@ class SnapshotTable(LakeTable):
             return 0
         affected = sorted(int(r["_bucket"]) for r in per_bucket)
         n_purge = int(sum(r["_hits"] for r in per_bucket))
-        inputs_by_bucket = {
-            str(b): set(self._snapshot["buckets"].get(str(b), []))
-            for b in affected
-        }
+        inputs_by_bucket = self._bucket_inputs(affected)
         if self.mode == "mor":
             raw = self._read_collapsed_local(
                 buckets=affected, with_bucket_col=True
@@ -2734,54 +2882,16 @@ class SnapshotTable(LakeTable):
             raw = self._read_raw(buckets=affected).withColumn(
                 "_bucket", _bucket_expr(list(self.key)[0], self.n_buckets)
             )
-        keep = raw.filter(~_dead(raw))
-        rel_dir = os.path.join("data", f"purge-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
-        keep.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-        new_files_by_bucket: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            bval = entry.split("=", 1)[1]
-            files = [
-                os.path.join(rel_dir, entry, fn)
-                for fn in os.listdir(os.path.join(out_dir, entry))
-                if fn.endswith(".parquet")
-            ]
-            if files:
-                new_files_by_bucket[bval] = files
-        for _attempt in range(10):
-            for b, inputs in inputs_by_bucket.items():
-                if set(self._snapshot["buckets"].get(b, [])) != inputs:
-                    raise ConcurrentCommitError(
-                        f"bucket {b} was rewritten while purge_tombstones "
-                        f"ran; re-run against the new state"
-                    )
-            new_buckets = {
-                k: list(f) for k, f in self._snapshot["buckets"].items()
-            }
-            for b in inputs_by_bucket:
-                if b in new_files_by_bucket:
-                    new_buckets[b] = new_files_by_bucket[b]
-                else:
-                    # every surviving row purged away: bucket is now empty
-                    new_buckets.pop(b, None)
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "buckets": new_buckets,
-                "parent": self._snapshot["version"],
-            }
-            try:
-                self._write_snapshot(snap, operation="purge_tombstones")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            return n_purge
-        raise ConcurrentCommitError(
-            "gave up committing purge_tombstones after 10 rebase attempts"
+        # a bucket whose every row was purged writes nothing and empties
+        outputs = self._write_buckets(raw.filter(~_dead(raw)), "purge")
+        self._commit(
+            "purge_tombstones",
+            lambda cur: {
+                **cur,
+                "buckets": _swap_buckets(cur, inputs_by_bucket, outputs),
+            },
         )
+        return n_purge
 
     def delete_where(self, predicate: str) -> int:
         """Ad-hoc predicate delete — the Delta ``DELETE FROM … WHERE``
@@ -2863,88 +2973,21 @@ class SnapshotTable(LakeTable):
         affected = sorted(int(r["_bucket"]) for r in per_bucket)
         n_deleted = int(sum(r["_hits"] for r in per_bucket))
         keep_cols = set(key) | set(order) | {"_bucket", _TOMBSTONE}
-        if self.mode == "mor":
-            # ---- deletion-vector path: append matched keys' tombstones as
-            # a per-bucket delta, rewrite nothing. Tombstones keep the
-            # deleted row's OWN order tuple (key + order carried, payload
-            # nulled — `when(hit, NULL)` keeps each column's type and the
-            # filter keeps only hit rows, where it is always NULL).
+        mor = self.mode == "mor"
+        inputs_by_bucket = self._bucket_inputs(affected)
+        if mor:
             raw = self._read_collapsed_local(
                 buckets=affected, with_bucket_col=True
             )
-            tomb = (
-                raw.select(
-                    *[
-                        (
-                            F.col(c)
-                            if c in keep_cols
-                            else F.when(hit, F.lit(None))
-                            .otherwise(F.col(c))
-                            .alias(c)
-                        )
-                        for c in raw.columns
-                        if c != _TOMBSTONE
-                    ],
-                    F.lit(True).alias(_TOMBSTONE),
-                    hit.alias("_hit"),
-                )
-                .filter(F.col("_hit"))
-                .drop("_hit")
+        else:
+            raw = self._read_raw(buckets=affected).withColumn(
+                "_bucket", _bucket_expr(key[0], nb)
             )
-            rel_dir = os.path.join(
-                "data", f"deletewhere-{uuid.uuid4().hex[:8]}"
-            )
-            out_dir = os.path.join(self.path, rel_dir)
-            tomb.write.partitionBy("_bucket").mode("overwrite").parquet(
-                out_dir
-            )
-            appended: dict[str, list[str]] = {}
-            for entry in os.listdir(out_dir):
-                if not entry.startswith("_bucket="):
-                    continue
-                bval = entry.split("=", 1)[1]
-                files = [
-                    os.path.join(rel_dir, entry, fn)
-                    for fn in os.listdir(os.path.join(out_dir, entry))
-                    if fn.endswith(".parquet")
-                ]
-                if files:
-                    appended[bval] = files
-            for _attempt in range(10):
-                # pure append: no input-files check needed — LWW layering
-                # stays correct over whatever the concurrent commit did
-                new_buckets = {
-                    k: list(f) for k, f in self._snapshot["buckets"].items()
-                }
-                for b, fs in appended.items():
-                    new_buckets[b] = new_buckets.get(b, []) + fs
-                snap = {
-                    **self._snapshot,
-                    "version": self._snapshot["version"] + 1,
-                    "buckets": new_buckets,
-                    "parent": self._snapshot["version"],
-                }
-                try:
-                    self._write_snapshot(snap, operation="delete_where")
-                except ConcurrentCommitError:
-                    self._snapshot = self._read_current_snapshot()
-                    continue
-                self._snapshot = snap
-                return n_deleted
-            raise ConcurrentCommitError(
-                "gave up committing delete_where after 10 rebase attempts"
-            )
-        # ---- CoW: targeted bucket rewrite
-        inputs_by_bucket = {
-            str(b): set(self._snapshot["buckets"].get(str(b), []))
-            for b in affected
-        }
-        raw = self._read_raw(buckets=affected).withColumn(
-            "_bucket", _bucket_expr(key[0], nb)
-        )
-        # matched live rows -> tombstones: keep key + order + bucket,
-        # NULL the payload (a tombstone's payload is NULL by contract)
-        rewritten = raw.select(
+        # matched live rows -> tombstones carrying the row's OWN order
+        # tuple: key + order + bucket kept, payload NULLed (a tombstone's
+        # payload is NULL by contract; `when(hit, NULL)` keeps each
+        # column's type)
+        rows = raw.select(
             *[
                 (
                     F.col(c)
@@ -2955,53 +2998,24 @@ class SnapshotTable(LakeTable):
                 if c != _TOMBSTONE
             ],
             (F.col(_TOMBSTONE) | hit).alias(_TOMBSTONE),
+            hit.alias("_hit"),
         )
-        rel_dir = os.path.join("data", f"deletewhere-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
-        rewritten.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-        new_files_by_bucket: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            bval = entry.split("=", 1)[1]
-            files = [
-                os.path.join(rel_dir, entry, fn)
-                for fn in os.listdir(os.path.join(out_dir, entry))
-                if fn.endswith(".parquet")
-            ]
-            if files:
-                new_files_by_bucket[bval] = files
-        for _attempt in range(10):
-            for b, inputs in inputs_by_bucket.items():
-                if set(self._snapshot["buckets"].get(b, [])) != inputs:
-                    raise ConcurrentCommitError(
-                        f"bucket {b} was rewritten while delete_where ran; "
-                        f"re-run against the new state"
-                    )
-            new_buckets = {
-                k: list(f) for k, f in self._snapshot["buckets"].items()
-            }
-            for b in inputs_by_bucket:
-                if b in new_files_by_bucket:
-                    new_buckets[b] = new_files_by_bucket[b]
-                else:
-                    new_buckets.pop(b, None)
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "buckets": new_buckets,
-                "parent": self._snapshot["version"],
-            }
-            try:
-                self._write_snapshot(snap, operation="delete_where")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            return n_deleted
-        raise ConcurrentCommitError(
-            "gave up committing delete_where after 10 rebase attempts"
+        # MoR — deletion-vector path: only the tombstones are written, as a
+        # per-bucket delta appended onto whatever the table holds at commit
+        # (LWW layering stays correct over any concurrent commit). CoW —
+        # targeted rewrite of the matched buckets, everything else carried.
+        rows = rows.filter(F.col("_hit")) if mor else rows
+        outputs = self._write_buckets(rows.drop("_hit"), "deletewhere")
+        self._commit(
+            "delete_where",
+            lambda cur: {
+                **cur,
+                "buckets": _append_buckets(cur["buckets"], outputs)
+                if mor
+                else _swap_buckets(cur, inputs_by_bucket, outputs),
+            },
         )
+        return n_deleted
 
     def update_where(self, predicate: str, set_exprs: dict[str, str]) -> int:
         """Ad-hoc predicate update — the Delta ``UPDATE … SET … WHERE``
@@ -3173,15 +3187,23 @@ class SnapshotTable(LakeTable):
                 )
 
         if self.mode == "mor":
-            # ---- patch-layer append: rewrite nothing.
-            # The ENTIRE derivation sits inside the rebase loop: a retry
-            # re-reads the collapsed state under the refreshed snapshot, so
-            # a concurrent update_where's patch layer is visible and this
-            # patch's _patched seq lands strictly ABOVE it — racing patches
-            # resolve in commit order, not payload-value order.
-            for _attempt in range(10):
+            v0 = self._snapshot["version"]
+
+            def build(cur: dict) -> dict | None:
+                """Patch-layer append, rewrite nothing. The ENTIRE
+                derivation runs per attempt: a rebase re-derives the
+                matched buckets and re-reads the collapsed state under the
+                refreshed snapshot, so a concurrent update_where's patch
+                layer is visible and this patch's _patched seq lands
+                strictly ABOVE it — racing patches resolve in commit order,
+                not payload-value order."""
+                nonlocal matched
+                if cur["version"] != v0:
+                    matched = _affected_buckets()
+                    if matched is None:
+                        return None
                 raw = self._read_collapsed_local(
-                    buckets=affected, with_bucket_col=True
+                    buckets=matched[0], with_bucket_col=True
                 )
                 # first-ever patch on this table: the collapsed read
                 # predates the snapshot flag, so the column may not exist
@@ -3198,115 +3220,33 @@ class SnapshotTable(LakeTable):
                     .withColumn(_TOMBSTONE, F.lit(False))
                 )
                 _enforce_constraints(patched)
-                rel_dir = os.path.join(
-                    "data", f"updatewhere-{uuid.uuid4().hex[:8]}"
-                )
-                out_dir = os.path.join(self.path, rel_dir)
-                patched.write.partitionBy("_bucket").mode(
-                    "overwrite"
-                ).parquet(out_dir)
-                appended: dict[str, list[str]] = {}
-                for entry in os.listdir(out_dir):
-                    if not entry.startswith("_bucket="):
-                        continue
-                    bval = entry.split("=", 1)[1]
-                    files = [
-                        os.path.join(rel_dir, entry, fn)
-                        for fn in os.listdir(os.path.join(out_dir, entry))
-                        if fn.endswith(".parquet")
-                    ]
-                    if files:
-                        appended[bval] = files
-                new_buckets = {
-                    k: list(f) for k, f in self._snapshot["buckets"].items()
-                }
-                for b, fs in appended.items():
-                    new_buckets[b] = new_buckets.get(b, []) + fs
-                snap = {
-                    **self._snapshot,
-                    "version": self._snapshot["version"] + 1,
-                    "buckets": new_buckets,
-                    "parent": self._snapshot["version"],
+                appended = self._write_buckets(patched, "updatewhere")
+                return {
+                    **cur,
+                    "buckets": _append_buckets(cur["buckets"], appended),
                     # arms the _patched order key for every future read
                     # (_has_patches) — never cleared: compact/rebucket
                     # materialize winners' patch seqs into rewrite files
                     "patched": True,
                 }
-                try:
-                    self._write_snapshot(snap, operation="update_where")
-                except ConcurrentCommitError:
-                    # refresh and re-derive: affected buckets, matched
-                    # count, AND the patch seq may all have moved under us
-                    # (the loser's orphaned updatewhere files are reaped by
-                    # vacuum like any unregistered data dir)
-                    self._snapshot = self._read_current_snapshot()
-                    matched = _affected_buckets()
-                    if matched is None:
-                        return 0
-                    affected, n_updated = matched
-                    continue
-                self._snapshot = snap
-                return n_updated
-            raise ConcurrentCommitError(
-                "gave up committing update_where after 10 rebase attempts"
-            )
+
+            return matched[1] if self._commit("update_where", build) else 0
         # ---- CoW: targeted bucket rewrite (patched in place, no marker)
-        inputs_by_bucket = {
-            str(b): set(self._snapshot["buckets"].get(str(b), []))
-            for b in affected
-        }
+        inputs_by_bucket = self._bucket_inputs(affected)
         raw = self._read_raw(buckets=affected).withColumn(
             "_bucket", _bucket_expr(key[0], nb)
         )
         rewritten = _patch_cols(raw, hit)
         _enforce_constraints(rewritten.filter(F.col("_hit")))
-        rewritten = rewritten.drop("_hit")
-        rel_dir = os.path.join("data", f"updatewhere-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
-        rewritten.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-        new_files_by_bucket: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            bval = entry.split("=", 1)[1]
-            files = [
-                os.path.join(rel_dir, entry, fn)
-                for fn in os.listdir(os.path.join(out_dir, entry))
-                if fn.endswith(".parquet")
-            ]
-            if files:
-                new_files_by_bucket[bval] = files
-        for _attempt in range(10):
-            for b, inputs in inputs_by_bucket.items():
-                if set(self._snapshot["buckets"].get(b, [])) != inputs:
-                    raise ConcurrentCommitError(
-                        f"bucket {b} was rewritten while update_where ran; "
-                        f"re-run against the new state"
-                    )
-            new_buckets = {
-                k: list(f) for k, f in self._snapshot["buckets"].items()
-            }
-            for b in inputs_by_bucket:
-                if b in new_files_by_bucket:
-                    new_buckets[b] = new_files_by_bucket[b]
-                else:
-                    new_buckets.pop(b, None)
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "buckets": new_buckets,
-                "parent": self._snapshot["version"],
-            }
-            try:
-                self._write_snapshot(snap, operation="update_where")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            return n_updated
-        raise ConcurrentCommitError(
-            "gave up committing update_where after 10 rebase attempts"
+        outputs = self._write_buckets(rewritten.drop("_hit"), "updatewhere")
+        self._commit(
+            "update_where",
+            lambda cur: {
+                **cur,
+                "buckets": _swap_buckets(cur, inputs_by_bucket, outputs),
+            },
         )
+        return n_updated
 
     def _purge_quarantine_key(self, key_cols: list, key_values: tuple) -> int:
         """Erase the key's rows from the quarantine store — right-to-be-
@@ -3364,29 +3304,16 @@ class SnapshotTable(LakeTable):
                 for fn in os.listdir(out_dir)
                 if fn.endswith(".parquet")
             ]
-        for _attempt in range(10):
-            merged = {
-                **self._snapshot.get("quarantine_files", {}),
-                **{k: v for k, v in new_map.items()},
-            }
-            for ek in set(qmap) - set(new_map):  # fully-scrubbed epochs
+        scrubbed = set(qmap) - set(new_map)  # fully-scrubbed epochs
+
+        def build(cur: dict) -> dict:
+            merged = {**cur.get("quarantine_files", {}), **new_map}
+            for ek in scrubbed:
                 merged.pop(ek, None)
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "parent": self._snapshot["version"],
-                "quarantine_files": merged,
-            }
-            try:
-                self._write_snapshot(snap, operation="purge_key")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            return removed
-        raise ConcurrentCommitError(
-            "gave up committing quarantine scrub after 10 rebase attempts"
-        )
+            return {**cur, "quarantine_files": merged}
+
+        self._commit("purge_key", build)
+        return removed
 
     def purge_key(self, *key_values, expire_history: bool = True) -> int:
         """Physically erase every stored row — live, superseded-in-delta,
@@ -3465,36 +3392,17 @@ class SnapshotTable(LakeTable):
             for fn in os.listdir(out_dir)
             if fn.endswith(".parquet")
         ]
-        for _attempt in range(10):
-            cur = self._snapshot["buckets"].get(str(b), [])
-            if set(cur) != inputs:
-                raise ConcurrentCommitError(
-                    f"bucket {b} was rewritten while purging key "
-                    f"{key_values!r}; re-run purge_key against the new state"
-                )
-            new_buckets = {k: list(f) for k, f in self._snapshot["buckets"].items()}
-            if new_files:
-                new_buckets[str(b)] = new_files
-            else:
-                new_buckets.pop(str(b), None)
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "buckets": new_buckets,
-                "parent": self._snapshot["version"],
-            }
-            try:
-                self._write_snapshot(snap, operation="purge_key")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            if expire_history:
-                self.vacuum(retain_versions=1)
-            return int(n_purge) + n_quarantine
-        raise ConcurrentCommitError(
-            "gave up committing key purge after 10 rebase attempts"
+        outputs = {str(b): new_files} if new_files else {}
+        self._commit(
+            "purge_key",
+            lambda cur: {
+                **cur,
+                "buckets": _swap_buckets(cur, {str(b): inputs}, outputs),
+            },
         )
+        if expire_history:
+            self.vacuum(retain_versions=1)
+        return int(n_purge) + n_quarantine
 
     def compact(
         self,
@@ -3568,70 +3476,42 @@ class SnapshotTable(LakeTable):
         )
         if not targets:
             return 0
-        inputs_by_bucket = {
-            str(t): set(self._snapshot["buckets"].get(str(t), [])) for t in targets
-        }
+        inputs_by_bucket = self._bucket_inputs(targets)
         # Bucket-local collapse: each target bucket's branch is one task that
         # scans its file group, reduces in place (no Exchange — see
         # ``_read_collapsed_local``), and writes its own partition directory,
         # so the rewrite needs NO repartition pass either.
         collapsed = self._read_collapsed_local(buckets=targets, with_bucket_col=True)
         k = max(int(cluster_files), 1)
-        part_cols = ["_bucket"]
         if k > 1:
             collapsed = collapsed.withColumn(
                 "_slice", self._cluster_slice_expr(targets, k)
             )
-            part_cols = ["_bucket", "_slice"]
-        rel_dir = os.path.join("data", f"compact-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
-        collapsed.write.partitionBy(*part_cols).mode("overwrite").parquet(out_dir)
-        outputs_by_bucket: dict[str, list[str]] = {str(t): [] for t in targets}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            bval = entry.split("=", 1)[1]
-            found: list[str] = []
-            for root, _dirs, fns in os.walk(os.path.join(out_dir, entry)):
-                rel_root = os.path.relpath(root, self.path)
-                found.extend(
-                    os.path.join(rel_root, fn)
-                    for fn in fns
-                    if fn.endswith(".parquet")
-                )
-            outputs_by_bucket[bval] = sorted(found)
-        for _attempt in range(10):
-            new_buckets = {b: list(f) for b, f in self._snapshot["buckets"].items()}
+        outputs = self._write_buckets(
+            collapsed, "compact", *(["_slice"] if k > 1 else [])
+        )
+        applied = 0
+
+        def build(cur: dict) -> dict | None:
+            nonlocal applied
+            new_buckets = {b: list(f) for b, f in cur["buckets"].items()}
             applied = 0
             for bval, inputs in inputs_by_bucket.items():
-                cur = new_buckets.get(bval, [])
-                if not inputs <= set(cur):
+                have = new_buckets.get(bval, [])
+                if not inputs <= set(have):
                     continue  # rewritten concurrently: skip, don't clobber
-                rest = [f for f in cur if f not in inputs]
-                merged = rest + outputs_by_bucket[bval]
+                merged = [f for f in have if f not in inputs] + outputs.get(
+                    bval, []
+                )
                 if merged:
                     new_buckets[bval] = merged
                 else:  # bucket held only empty files: it vanishes
                     new_buckets.pop(bval, None)
                 applied += 1
-            if applied == 0:
-                return 0  # every target was rewritten under us
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "buckets": new_buckets,
-                "parent": self._snapshot["version"],
-            }
-            try:
-                self._write_snapshot(snap, operation="compact")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                continue
-            self._snapshot = snap
-            return applied
-        raise ConcurrentCommitError(
-            "gave up committing compaction after 10 rebase attempts"
-        )
+            # every target rewritten under us: nothing left to commit
+            return {**cur, "buckets": new_buckets} if applied else None
+
+        return applied if self._commit("compact", build) else 0
 
     def maintain(
         self,
@@ -3756,8 +3636,6 @@ class SnapshotTable(LakeTable):
             if self.mode == "mor"
             else self._read_raw()
         )
-        rel_dir = os.path.join("data", f"rebucket-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
         new_buckets: dict[str, list[str]] = {}
         if df is not None:
             storage = self._storage_schema()
@@ -3767,34 +3645,15 @@ class SnapshotTable(LakeTable):
             with self._conf_overrides(
                 {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
             ):
-                (
-                    df.repartition(nb, F.col("_bucket"))
-                    .write.partitionBy("_bucket")
-                    .mode("overwrite")
-                    .parquet(out_dir)
+                new_buckets = self._write_buckets(
+                    df.repartition(nb, F.col("_bucket")), "rebucket"
                 )
-            for entry in os.listdir(out_dir):
-                if not entry.startswith("_bucket="):
-                    continue
-                files = [
-                    os.path.join(rel_dir, entry, fn)
-                    for fn in os.listdir(os.path.join(out_dir, entry))
-                    if fn.endswith(".parquet")
-                ]
-                if files:
-                    new_buckets[entry.split("=", 1)[1]] = files
-        snap = {
-            **self._snapshot,
-            "version": self._snapshot["version"] + 1,
-            "n_buckets": nb,
-            "buckets": new_buckets,
-            "parent": self._snapshot["version"],
-        }
         # NO rebase on conflict: a concurrent epoch was merged under the OLD
         # bucket layout; grafting its files into the new layout would put
         # rows in the wrong buckets. The reshard fails whole; rerun it.
-        self._write_snapshot(snap, operation="rebucket")
-        self._snapshot = snap
+        self._commit_pinned(
+            "rebucket", {**self._snapshot, "n_buckets": nb, "buckets": new_buckets}
+        )
         return sum(len(f) for f in new_buckets.values())
 
     def restore(self, version: int) -> int:
@@ -3871,8 +3730,6 @@ class SnapshotTable(LakeTable):
 
         snap = {
             **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
             "schema": target["schema"],
             "n_buckets": target["n_buckets"],
             "key": target["key"],
@@ -3909,29 +3766,10 @@ class SnapshotTable(LakeTable):
                 | set(target.get("feed_excluded", []))
             ),
         }
-        # seed the stats carry-forward with the TARGET's entries too:
-        # files the restore re-adds (dropped since `version`) would
-        # otherwise need a parquet-footer read each. Metadata-only and
-        # immutable-file-derived, so harmless if the commit below loses
-        # the CAS race (the caller reloads on ConcurrentCommitError).
-        self._snapshot = {
-            **cur,
-            "file_sizes": {
-                **target.get("file_sizes", {}),
-                **cur.get("file_sizes", {}),
-            },
-            "file_stats": {
-                **target.get("file_stats", {}),
-                **cur.get("file_stats", {}),
-            },
-            "file_key_digests": {
-                **target.get("file_key_digests", {}),
-                **cur.get("file_key_digests", {}),
-            },
-        }
-        self._write_snapshot(snap, operation="restore")
-        self._snapshot = snap
-        return int(snap["version"])
+        # seed the stats carry-forward with the TARGET's entries too: files
+        # the restore re-adds (dropped since `version`) would otherwise
+        # need a parquet-footer read each
+        return int(self._commit_pinned("restore", snap, seed=target)["version"])
 
     def restore_to_timestamp(self, ts) -> int:
         """``RESTORE TABLE … TO TIMESTAMP AS OF`` analog: roll back to the
@@ -4015,8 +3853,6 @@ class SnapshotTable(LakeTable):
             cons.pop(f"gen_{name}", None)
         snap = {
             **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
             "schema": T.StructType(
                 [f for f in self.schema.fields if f.name != name]
             ).jsonValue(),
@@ -4027,9 +3863,7 @@ class SnapshotTable(LakeTable):
             "generated_columns": gen,
             "constraints": cons,
         }
-        self._write_snapshot(snap, operation="drop_column")
-        self._snapshot = snap
-        return int(snap["version"])
+        return int(self._commit_pinned("drop_column", snap)["version"])
 
     def rename_column(self, old: str, new: str) -> int:
         """Rename a value column — the Iceberg ``ALTER TABLE … RENAME
@@ -4104,8 +3938,6 @@ class SnapshotTable(LakeTable):
         aliases[new] = aliases.pop(old, []) + [old]
         snap = {
             **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
             "schema": T.StructType(
                 [
                     (
@@ -4118,9 +3950,7 @@ class SnapshotTable(LakeTable):
             ).jsonValue(),
             "column_aliases": aliases,
         }
-        self._write_snapshot(snap, operation="rename_column")
-        self._snapshot = snap
-        return int(snap["version"])
+        return int(self._commit_pinned("rename_column", snap)["version"])
 
     @property
     def constraints(self) -> dict:
@@ -4240,8 +4070,6 @@ class SnapshotTable(LakeTable):
             )
         snap = {
             **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
             "schema": T.StructType(
                 list(self.schema.fields) + [T.StructField(name, dtype)]
             ).jsonValue(),
@@ -4254,9 +4082,7 @@ class SnapshotTable(LakeTable):
                 cons_name: {"expr": f"{name} <=> ({expr})", "mode": "fail"},
             },
         }
-        self._write_snapshot(snap, operation="add_generated_column")
-        self._snapshot = snap
-        return int(snap["version"])
+        return int(self._commit_pinned("add_generated_column", snap)["version"])
 
     def _apply_generated(self, batch: DataFrame) -> DataFrame:
         """Compute registered generated columns the batch omits (map-side,
@@ -4368,47 +4194,39 @@ class SnapshotTable(LakeTable):
                 )
         snap = {
             **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
             "constraints": {
                 **cur.get("constraints", {}),
                 name: {"expr": expr, "mode": mode},
             },
         }
-        self._write_snapshot(snap, operation="add_constraint")
-        self._snapshot = snap
-        return int(snap["version"])
+        return int(self._commit_pinned("add_constraint", snap)["version"])
 
     def drop_constraint(self, name: str) -> int:
         """Remove a CHECK constraint. Returns the new version. The
         implicit ``gen_*`` validation constraint of a generated column
         refuses (generation without validation is a contract hole —
-        ``drop_column`` the generated column to retire both)."""
-        cur = self._snapshot
-        cons = dict(cur.get("constraints", {}))
-        if name not in cons:
-            raise ValueError(
-                f"drop_constraint: no constraint {name!r} "
-                f"(have {sorted(cons)})"
-            )
-        if (
-            name.startswith("gen_")
-            and name[4:] in cur.get("generated_columns", {})
-        ):
-            raise ValueError(
-                f"drop_constraint: {name!r} is the implicit validation of "
-                f"generated column {name[4:]!r}; drop_column it instead"
-            )
-        cons.pop(name)
-        snap = {
-            **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
-            "constraints": cons,
-        }
-        self._write_snapshot(snap, operation="drop_constraint")
-        self._snapshot = snap
-        return int(snap["version"])
+        ``drop_column`` the generated column to retire both). Rebases
+        over concurrent commits, re-validating against each."""
+
+        def build(cur: dict) -> dict:
+            cons = dict(cur.get("constraints", {}))
+            if name not in cons:
+                raise ValueError(
+                    f"drop_constraint: no constraint {name!r} "
+                    f"(have {sorted(cons)})"
+                )
+            if name.startswith("gen_") and name[4:] in cur.get(
+                "generated_columns", {}
+            ):
+                raise ValueError(
+                    f"drop_constraint: {name!r} is the implicit validation "
+                    f"of generated column {name[4:]!r}; drop_column it "
+                    f"instead"
+                )
+            cons.pop(name)
+            return {**cur, "constraints": cons}
+
+        return int(self._commit("drop_constraint", build)["version"])
 
     def _constraint_checks(
         self, df: DataFrame
@@ -4508,25 +4326,21 @@ class SnapshotTable(LakeTable):
         """Deregister quarantined rows after triage — one epoch's, or all.
         Metadata-only commit (same version CAS as every maintenance op);
         the files themselves become unreferenced once the snapshots naming
-        them expire, and ``vacuum`` reclaims them then. Returns the number
-        of epochs cleared."""
-        cur = self._snapshot
-        qmap = {k: list(v) for k, v in cur.get("quarantine_files", {}).items()}
-        if epoch_id is not None:
-            cleared = 1 if qmap.pop(_epoch_key(epoch_id), None) is not None else 0
-        else:
-            cleared = len(qmap)
-            qmap = {}
-        if not cleared:
-            return 0
-        snap = {
-            **cur,
-            "version": int(cur["version"]) + 1,
-            "parent": int(cur["version"]),
-            "quarantine_files": qmap,
-        }
-        self._write_snapshot(snap, operation="clear_quarantine")
-        self._snapshot = snap
+        them expire, and ``vacuum`` reclaims them then. Rebases over
+        concurrent commits (the count is taken against the snapshot the
+        commit lands on). Returns the number of epochs cleared."""
+        cleared = 0
+
+        def build(cur: dict) -> dict | None:
+            nonlocal cleared
+            qmap = dict(cur.get("quarantine_files", {}))
+            if epoch_id is None:
+                cleared, qmap = len(qmap), {}
+            else:
+                cleared = int(qmap.pop(_epoch_key(epoch_id), None) is not None)
+            return {**cur, "quarantine_files": qmap} if cleared else None
+
+        self._commit("clear_quarantine", build)
         return cleared
 
     def clone(self, dest_path: str) -> "SnapshotTable":
@@ -4647,21 +4461,13 @@ class SnapshotTable(LakeTable):
         }
         tbl = object.__new__(type(self))
         tbl.spark, tbl.path = self.spark, dest_path
-        # seed the stats carry-forward: _write_snapshot rebuilds
-        # file_sizes/file_stats from its `prev` snapshot and falls back to
-        # parquet-footer reads for files it has no entry for — hand the
-        # source's entries over so the clone opens ZERO data files (the
-        # O(files)-metadata promise above). Empty buckets keep the
-        # added_files delta = every file, correct for a root snapshot.
-        tbl._snapshot = {
-            "buckets": {},
-            "file_sizes": dict(self._snapshot.get("file_sizes", {})),
-            "file_stats": dict(self._snapshot.get("file_stats", {})),
-            "file_key_digests": dict(
-                self._snapshot.get("file_key_digests", {})
-            ),
-        }
-        tbl._write_snapshot(snap, operation="clone")
+        # the source's per-file entries seed the manifest carry-forward, so
+        # the clone opens ZERO data files (the O(files)-metadata promise
+        # above); empty parent buckets keep added_files = every file, as a
+        # root snapshot's must be
+        tbl._write_snapshot(
+            snap, operation="clone", prev={**self._snapshot, "buckets": {}}
+        )
         tbl._snapshot = snap
         # static fork provenance (never vacuumed — snapshot v0 can expire):
         # fast_forward uses it to prove the fork descends from this table
@@ -4783,23 +4589,9 @@ class SnapshotTable(LakeTable):
                 ):
                     adopted.add(rel)
 
-        snap = {
-            k: v
-            for k, v in fsnap.items()
-            if k
-            not in (
-                "version",
-                "parent",
-                "added_files",
-                "adopted_feed_files",
-                "file_sizes",
-                "file_stats",
-                "file_key_digests",
-                "feed_floor",
-            )
-        }
-        snap["version"] = int(self._snapshot["version"]) + 1
-        snap["parent"] = int(self._snapshot["version"])
+        # the fork's logical state; version/parent and the per-file
+        # manifest (added_files included) are re-derived by the commit
+        snap = {k: v for k, v in fsnap.items() if k != "feed_floor"}
         if "feed_floor" in self._snapshot:  # this table's own clone floor
             snap["feed_floor"] = self._snapshot["feed_floor"]
         excl = set(self._snapshot.get("feed_excluded", [])) | set(
@@ -4808,26 +4600,9 @@ class SnapshotTable(LakeTable):
         if excl:
             snap["feed_excluded"] = sorted(excl)
         snap["adopted_feed_files"] = sorted(adopted)
-        # zero-file-open manifest rebuild: hand the fork's per-file
-        # sizes/stats/digests to the enrichment carry-forward
-        self._snapshot = {
-            **self._snapshot,
-            "file_sizes": {
-                **fsnap.get("file_sizes", {}),
-                **self._snapshot.get("file_sizes", {}),
-            },
-            "file_stats": {
-                **fsnap.get("file_stats", {}),
-                **self._snapshot.get("file_stats", {}),
-            },
-            "file_key_digests": {
-                **fsnap.get("file_key_digests", {}),
-                **self._snapshot.get("file_key_digests", {}),
-            },
-        }
-        self._write_snapshot(snap, operation="fast_forward")
-        self._snapshot = snap
-        return int(snap["version"])
+        # zero-file-open manifest rebuild: the fork's per-file entries seed
+        # the enrichment carry-forward
+        return int(self._commit_pinned("fast_forward", snap, seed=fsnap)["version"])
 
     def bootstrap(
         self,
@@ -4939,26 +4714,13 @@ class SnapshotTable(LakeTable):
         df = align_schemas(
             state.withColumn(_TOMBSTONE, tomb), storage
         ).withColumn("_bucket", _bucket_expr(key[0], nb))
-        rel_dir = os.path.join("data", f"bootstrap-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
         with self._conf_overrides(
             {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
         ):
             df = df.repartition(nb, F.col("_bucket"))
             if sort_within_buckets:
                 df = df.sortWithinPartitions(*key)
-            df.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-        new_buckets: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            files = [
-                os.path.join(rel_dir, entry, fn)
-                for fn in os.listdir(os.path.join(out_dir, entry))
-                if fn.endswith(".parquet")
-            ]
-            if files:
-                new_buckets[entry.split("=", 1)[1]] = files
+            new_buckets = self._write_buckets(df, "bootstrap")
 
         # Per-bucket lineage from the parquet FOOTERS the write just
         # produced (row counts + max lsn) — zero extra data passes, same
@@ -5048,51 +4810,26 @@ class SnapshotTable(LakeTable):
                 ),
             )
 
-        for _attempt in range(10):
-            extras = {str(e) for e in self._snapshot["committed_epochs"]}
-            extras.add(_epoch_key(epoch_id))
-            folded, watermarks = _fold_epochs(
-                extras, self._snapshot.get("epoch_watermarks", {})
-            )
-            snap = {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                "schema": new_schema.jsonValue(),
+        def build(cur: dict) -> dict | None:
+            if self.is_epoch_committed(epoch_id):
+                return None
+            if cur["buckets"]:
+                raise ValueError(
+                    "a concurrent writer loaded data during bootstrap; "
+                    "the table is no longer empty — bootstrap aborted"
+                )
+            return {
+                **cur,
                 "buckets": new_buckets,
-                "committed_epochs": folded,
-                "epoch_watermarks": watermarks,
-                "parent": self._snapshot["version"],
-                **(
-                    {
-                        "quarantine_files": {
-                            **self._snapshot.get("quarantine_files", {}),
-                            _epoch_key(epoch_id): _q_files,
-                        }
-                    }
-                    if _q_files
-                    else {}
-                ),
+                **_with_epoch(cur, _epoch_key(epoch_id), new_schema, _q_files),
             }
-            try:
-                self._write_snapshot(snap, operation="bootstrap")
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                if self.is_epoch_committed(epoch_id):
-                    return MergeStats(epoch_id, 0, 0, 0, None, was_noop=True)
-                if self._snapshot["buckets"]:
-                    raise ValueError(
-                        "a concurrent writer loaded data during bootstrap; "
-                        "the table is no longer empty — bootstrap aborted"
-                    )
-                continue
-            self._snapshot = snap
-            return MergeStats(
-                epoch_id, applied, 0, 0, max_lsn, was_noop=False,
-                timings={"bootstrap": wall},
-                violations=_violations if _cons else None,
-            )
-        raise ConcurrentCommitError(
-            f"gave up committing bootstrap {epoch_id} after 10 attempts"
+
+        if self._commit("bootstrap", build) is None:
+            return MergeStats(epoch_id, 0, 0, 0, None, was_noop=True)
+        return MergeStats(
+            epoch_id, applied, 0, 0, max_lsn, was_noop=False,
+            timings={"bootstrap": wall},
+            violations=_violations if _cons else None,
         )
 
     def lookup(self, *key_values, columns: list[str] | None = None) -> DataFrame:
@@ -5461,6 +5198,7 @@ class SnapshotTable(LakeTable):
         )
         rel_dir = os.path.join("data", f"epoch={_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
+        epoch_files: dict[str, list[str]] = {}  # this epoch's files per bucket
         if affected is None or affected:
             obs = None
             per_bucket = False
@@ -5551,6 +5289,7 @@ class SnapshotTable(LakeTable):
                     .mode("overwrite")
                     .parquet(out_dir)
                 )
+            epoch_files = self._bucket_outputs(rel_dir)
             _timings["write"] = round(time.perf_counter() - _t0, 3)
             if mor:
                 # ---- per-bucket lineage from the epoch delta just written:
@@ -5558,10 +5297,7 @@ class SnapshotTable(LakeTable):
                 # MoR appends are insert-only (verdict is apply|delete,
                 # never skip), so applied = rows - deletes exactly.
                 _t0 = time.perf_counter()
-                wrote_any = os.path.isdir(out_dir) and any(
-                    e.startswith("_bucket=") for e in os.listdir(out_dir)
-                )
-                if wrote_any:
+                if epoch_files:
                     srows = (
                         self.spark.read.parquet(out_dir)
                         .groupBy("_bucket")
@@ -5642,47 +5378,17 @@ class SnapshotTable(LakeTable):
             # expectations event log: counts survive MergeStats (DLT parity)
             self._append_constraint_metrics(epoch_id, _violations)
 
-        # map written files back to buckets from the partition directories:
-        # CoW replaces each affected bucket's file list (the rewrite carried
-        # every surviving row); MoR appends the epoch's delta files to it.
-        if mor:
-            new_buckets: dict[str, list[str]] = {
-                b_: list(files) for b_, files in self._snapshot["buckets"].items()
-            }
-        else:
-            new_buckets = {
-                b_: files
-                for b_, files in self._snapshot["buckets"].items()
-                if int(b_) not in affected
-            }
-        affected_set = set(affected)
-        epoch_files: dict[str, list[str]] = {}  # this epoch's files per bucket
-        for entry in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
-            if not entry.startswith("_bucket="):
-                continue
-            bval = entry.split("=", 1)[1]
-            if int(bval) not in affected_set:
-                # A written bucket outside the pre-pass's affected set means
-                # the caller's pre_stats were computed with a different
-                # bucket column / n_buckets than this table's — replacing an
-                # un-read bucket's file list would silently drop its rows.
-                raise ValueError(
-                    f"merge wrote bucket {bval} not in affected set "
-                    f"{sorted(affected_set)}; pre_stats were computed with a "
-                    f"mismatched bucket column or n_buckets"
-                )
-            bdir = os.path.join(out_dir, entry)
-            files = [
-                os.path.join(rel_dir, entry, fn)
-                for fn in os.listdir(bdir)
-                if fn.endswith(".parquet")
-            ]
-            if files:
-                epoch_files[bval] = files
-                if mor:
-                    new_buckets[bval] = new_buckets.get(bval, []) + files
-                else:
-                    new_buckets[bval] = files
+        stray = sorted(set(epoch_files) - {str(b_) for b_ in affected}, key=int)
+        if stray:
+            # A written bucket outside the pre-pass's affected set means
+            # the caller's pre_stats were computed with a different
+            # bucket column / n_buckets than this table's — replacing an
+            # un-read bucket's file list would silently drop its rows.
+            raise ValueError(
+                f"merge wrote bucket {stray[0]} not in affected set "
+                f"{sorted(affected)}; pre_stats were computed with a "
+                f"mismatched bucket column or n_buckets"
+            )
 
         # ---- lineage append (before the snapshot pointer flips; a crash
         # here re-appends on replay, and readers key lineage by epoch_key) ---
@@ -5739,71 +5445,47 @@ class SnapshotTable(LakeTable):
         _timings["lineage"] = round(time.perf_counter() - _t0, 3)
 
         # ---- atomic snapshot commit: data + schema + epoch in ONE rename ---
-        # Built over the previous snapshot so table-level metadata (custom
+        # Built over the current snapshot so table-level metadata (custom
         # MERGE key/order, n_buckets, future fields) survives every commit —
         # a snapshot that silently drops "key"/"order" would merge on the
         # wrong columns from epoch 2 onward (regression-tested in
         # tests/test_merge_exactly_once.py::test_custom_key_survives_commits).
-        # On a ConcurrentCommitError (another writer won this version's CAS,
-        # see _write_snapshot), MoR merges REBASE and retry: the epoch's
-        # delta files are pure appends, so they graft onto the winner's
-        # bucket lists unchanged (schema re-merged, epoch set re-folded).
-        # CoW must re-raise — its rewrite was computed against a file set
-        # the winner may have replaced.
-        def _build_commit() -> dict:
-            extras = {str(e) for e in self._snapshot["committed_epochs"]}
-            extras.add(_epoch_key(epoch_id))
-            folded, watermarks = _fold_epochs(
-                extras, self._snapshot.get("epoch_watermarks", {})
-            )
+        # On a conflict (another writer won this version's CAS), MoR merges
+        # REBASE: the epoch's delta files are pure appends, so they graft
+        # onto the winner's bucket lists unchanged (schema re-merged, epoch
+        # set re-folded). CoW must raise — its rewrite was computed against
+        # a file set the winner may have replaced.
+        parent_v = self._snapshot["version"]
+        affected_set = set(affected)
+
+        def build(cur: dict) -> dict | None:
+            if cur["version"] != parent_v:
+                if self.is_epoch_committed(epoch_id):
+                    # the concurrent writer committed THIS epoch (dueling
+                    # replays of the same batch): ours is a no-op; the
+                    # orphaned duplicate delta files are vacuum's to reap
+                    return None
+                if not mor:
+                    raise ConcurrentCommitError(
+                        f"copy-on-write epoch {epoch_id!r} was merged "
+                        f"against snapshot version {parent_v} but a "
+                        f"concurrent writer moved the table to "
+                        f"{cur['version']}; reload and re-run the merge"
+                    )
+            # CoW replaces each affected bucket's file list (the rewrite
+            # carried every surviving row); MoR appends the epoch's deltas
+            kept = cur["buckets"] if mor else {
+                b_: fs
+                for b_, fs in cur["buckets"].items()
+                if int(b_) not in affected_set
+            }
             return {
-                **self._snapshot,
-                "version": self._snapshot["version"] + 1,
-                # re-filter by the CURRENT dropped + renamed-away sets: a
-                # concurrent drop_column/rename_column may have landed
-                # between our schema merge and this (rebased) commit — its
-                # change must win. Delta files this epoch wrote under a
-                # concurrently-renamed old name stay readable through the
-                # alias registry's read-time coalesce.
-                "schema": merge_schemas(
-                    self.schema,
-                    T.StructType(
-                        [
-                            f
-                            for f in new_schema.fields
-                            if f.name
-                            not in (
-                                set(self._snapshot.get("dropped_columns", []))
-                                | {
-                                    o
-                                    for olds in self._snapshot.get(
-                                        "column_aliases", {}
-                                    ).values()
-                                    for o in olds
-                                }
-                            )
-                        ]
-                    ),
-                    allow_widening=self.type_widening,
-                ).jsonValue(),
-                "buckets": new_buckets,
-                "committed_epochs": folded,
-                "epoch_watermarks": watermarks,
-                "parent": self._snapshot["version"],
-                **(
-                    {
-                        "quarantine_files": {
-                            **self._snapshot.get("quarantine_files", {}),
-                            _epoch_key(epoch_id): _q_files,
-                        }
-                    }
-                    if _q_files
-                    else {}
-                ),
+                **cur,
+                "buckets": _append_buckets(kept, epoch_files),
+                **_with_epoch(cur, _epoch_key(epoch_id), new_schema, _q_files),
             }
 
         _t0 = time.perf_counter()
-        snap = _build_commit()
         if stage:
             # ---- write-audit-publish: persist the would-be snapshot under
             # snapshots/staged/ instead of committing it. The staged file is
@@ -5814,26 +5496,22 @@ class SnapshotTable(LakeTable):
             # is_epoch_committed all still see the parent state.
             ref = f"e{_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}"
             staged = {
-                **snap,
+                **build(self._snapshot),
+                "version": parent_v + 1,
+                "parent": parent_v,
                 "staged_ref": ref,
                 "staged_epoch": _epoch_key(epoch_id),
                 "staged_mode": self.mode,
-                "staged_parent": self._snapshot["version"],
+                "staged_parent": parent_v,
                 "staged_added": {b: list(fs) for b, fs in epoch_files.items()},
                 "staged_quarantine": list(_q_files),
                 "staged_counts": [applied, skipped, deleted],
                 "staged_max_lsn": max_lsn,
             }
-            self._enrich_snapshot(staged)
+            self._enrich_snapshot(staged, self._snapshot)
             sdir = os.path.join(self.path, "snapshots", "staged")
             os.makedirs(sdir, exist_ok=True)
-            spath = os.path.join(sdir, f"{ref}.json")
-            tmp = spath + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as f:
-                json.dump(staged, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.rename(tmp, spath)
+            _durable_write(os.path.join(sdir, f"{ref}.json"), json.dumps(staged))
             _timings["stage"] = round(time.perf_counter() - _t0, 3)
             return MergeStats(
                 epoch_id,
@@ -5846,30 +5524,8 @@ class SnapshotTable(LakeTable):
                 violations=_violations if _cons else None,
                 staged_ref=ref,
             )
-        for _attempt in range(10):
-            try:
-                self._write_snapshot(snap, operation="merge")
-                break
-            except ConcurrentCommitError:
-                self._snapshot = self._read_current_snapshot()
-                if self.is_epoch_committed(epoch_id):
-                    # the concurrent writer committed THIS epoch (dueling
-                    # replays of the same batch): ours is a no-op; the
-                    # orphaned duplicate delta files are vacuum's to reap
-                    return MergeStats(epoch_id, 0, 0, 0, None, was_noop=True)
-                if not mor:
-                    raise
-                new_buckets = {
-                    b_: list(fs) for b_, fs in self._snapshot["buckets"].items()
-                }
-                for bval, files in epoch_files.items():
-                    new_buckets[bval] = new_buckets.get(bval, []) + files
-                snap = _build_commit()
-        else:
-            raise ConcurrentCommitError(
-                f"gave up committing epoch {epoch_id} after 10 rebase attempts"
-            )
-        self._snapshot = snap
+        if self._commit("merge", build) is None:
+            return MergeStats(epoch_id, 0, 0, 0, None, was_noop=True)
         _timings["commit"] = round(time.perf_counter() - _t0, 3)
         if mor and auto_compact_files:
             # post-commit maintenance: exactly-once is already sealed by the

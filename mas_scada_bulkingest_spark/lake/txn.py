@@ -73,7 +73,7 @@ import json
 import os
 import uuid
 
-from .snapshot_table import MergeStats, SnapshotTable
+from .snapshot_table import MergeStats, SnapshotTable, _durable_write
 
 __all__ = ["MultiTableTransaction", "TransactionError", "recover"]
 
@@ -183,20 +183,14 @@ class MultiTableTransaction:
             ],
         }
         final = os.path.join(self.log_dir, _manifest_name(self.txn_id))
-        tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
         try:
-            os.link(tmp, final)  # atomic decision: COMMITTED from here on
+            # atomic decision: COMMITTED from here on
+            _durable_write(final, json.dumps(manifest), exclusive=True)
         except FileExistsError:
             raise TransactionError(
                 f"txn id {self.txn_id!r} already decided in {self.log_dir} "
                 "— transaction ids are single-use"
             ) from None
-        finally:
-            os.unlink(tmp)
         self._decided = True
 
     def _complete(self) -> dict[str, MergeStats]:

@@ -10,10 +10,13 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mas_scada_bulkingest_spark.cdc_queries import (
     _IDEMP_MAX_EPOCHS,
+    _N_EPOCHS,
+    _check_idempotent_cap,
     _idempotent_epoch_sample,
 )
 from mas_scada_bulkingest_spark.lake.snapshot_table import SnapshotTable
@@ -25,6 +28,14 @@ def test_sample_identity_below_cap():
     eps = list(range(_IDEMP_MAX_EPOCHS))
     assert _idempotent_epoch_sample(eps) == eps
     assert _idempotent_epoch_sample([0, 1, 2, 3]) == [0, 1, 2, 3]
+
+
+def test_epoch_count_above_cap_fails_loudly():
+    # the oracle enumerates all _N_EPOCHS epochs: the query must replay all
+    assert _N_EPOCHS <= _IDEMP_MAX_EPOCHS
+    _check_idempotent_cap(_IDEMP_MAX_EPOCHS, _IDEMP_MAX_EPOCHS)
+    with pytest.raises(ValueError, match="_IDEMP_MAX_EPOCHS"):
+        _check_idempotent_cap(_IDEMP_MAX_EPOCHS + 1, _IDEMP_MAX_EPOCHS)
 
 
 def test_sample_first_last_above_cap():
