@@ -58,7 +58,7 @@ from .derived import (
     refresh_derived,
     refresh_rollup,
 )
-from .lake.snapshot_table import SnapshotTable
+from .lake.snapshot_table import _CURRENT, SnapshotTable
 from .operators.lww import collapse_lww
 from .pipeline import apply_changes, create_conversations_registry
 from .schemas import TRANSCRIPT_SCHEMA
@@ -98,15 +98,37 @@ def _cleanup_workdirs() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _live_path(p: str) -> bool:
+    """A cached directory is live iff it exists and, when it is a
+    :class:`SnapshotTable` (it has a ``_CURRENT`` pointer or a
+    ``snapshots/`` dir), the pointer and the snapshot file it names exist
+    too — a table whose metadata was removed under a surviving directory
+    would otherwise raise on open instead of being rebuilt."""
+    if not os.path.isdir(p):
+        return False
+    current = os.path.join(p, _CURRENT)
+    if not os.path.exists(current) and not os.path.isdir(
+        os.path.join(p, "snapshots")
+    ):
+        return True
+    try:
+        with open(current) as f:
+            name = f.read().strip()
+    except OSError:
+        return False
+    return bool(name) and os.path.isfile(os.path.join(p, "snapshots", name))
+
+
 def _cache_lookup(cache: dict, key: str):
-    """Return ``cache[key]`` iff every filesystem path it references still
-    exists; otherwise evict the stale entry and return None (rebuild)."""
+    """Return ``cache[key]`` iff every filesystem path it references is
+    still live (:func:`_live_path`); otherwise evict the stale entry and
+    return None (rebuild)."""
     val = cache.get(key)
     if val is None:
         return None
     paths = val if isinstance(val, tuple) else (val,)
     if all(
-        os.path.isdir(p)
+        _live_path(p)
         for p in paths
         if isinstance(p, str) and p.startswith("/")
     ):
@@ -1912,6 +1934,18 @@ _WM_MAX_DRIVER_ROWS = 1_000_000
 
 _WM_CACHE: dict[str, pd.DataFrame] = {}
 
+#: DuckDB mirror of :func:`_wm_jitter`; keep the two in lockstep.
+_SQL_WM_JITTER = "((event_id % 97) * (2654435761 % 97)) % 97 - 48"
+
+
+def _wm_jitter(event_id):
+    """Arrival jitter in [-48, 48] of the watermark stream's event
+    ``event_id``: ``(event_id * 2654435761) % 97 - 48`` with event_id
+    reduced mod 97 BEFORE the multiply, so the product stays below 97^2 —
+    no int64 wrap (or ANSI overflow error) however large event_id grows,
+    and the same value for every non-negative event_id."""
+    return ((event_id % 97) * F.lit(2654435761 % 97)) % 97 - 48
+
 
 def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time windowed rollup through a REAL Structured-Streaming
@@ -1972,7 +2006,7 @@ def _run_watermark_stream(spark: SparkSession, sf_dir: str) -> pd.DataFrame:
     else:
         n = total
     rows_per = math.ceil(n / _WM_BATCHES)
-    jitter = (F.col("event_id") * F.lit(2654435761)) % 97 - 48
+    jitter = _wm_jitter(F.col("event_id"))
     straggle = F.lit(3 * rows_per)
     arrival = F.col("event_id") + F.when(
         F.col("event_id") % _WM_STRAGGLER_MOD == 0, straggle
@@ -2081,7 +2115,7 @@ WITH stride AS (
          row_number() OVER (
            ORDER BY event_id + CASE WHEN event_id % {_WM_STRAGGLER_MOD} = 0
                                     THEN 3 * (SELECT rows_per FROM params)
-                                    ELSE (event_id * 2654435761) % 97 - 48
+                                    ELSE {_SQL_WM_JITTER}
                                END,
                     event_id
          ) - 1 AS rn

@@ -53,6 +53,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from datetime import datetime
 
@@ -494,8 +495,8 @@ def compute_bucket_stats(
     df: DataFrame, bucket_col: str, n_buckets: int, lsn_col: str = "lsn"
 ) -> list:
     """Per-bucket (n_in, max_lsn) over a raw change batch — ONE column-pruned
-    map-side-combined scan. Shared by the MERGE's bucket pruning / lineage
-    watermark AND the pipeline's hot-bucket gate (a bucket under the hot-key
+    map-side-combined scan. Shared by the copy-on-write MERGE's bucket
+    pruning / lineage watermark AND the pipeline's hot-bucket gate (a bucket under the hot-key
     threshold cannot contain a hot key), so hot-key detection costs no extra
     scan in the common cold case."""
     lsn = F.col(lsn_col) if lsn_col in df.columns else F.lit(None).cast("long")
@@ -505,6 +506,24 @@ def compute_bucket_stats(
         .agg(F.count(F.lit(1)).alias("n_in"), F.max(lsn).alias("max_lsn"))
         .collect()
     )
+
+
+def _delta_lineage(abs_files: list[str]) -> tuple[int, int, int | None]:
+    """``(rows, deletes, max_lsn)`` of one bucket's merge-on-read epoch
+    delta files: rows from the footers, deletes = true ``_tombstone``
+    values, max LSN = max of the ``_max_lsn`` helper column (None when it
+    is all-null — a batch without ``lsn``). Reads those two columns only."""
+    rows = deletes = 0
+    max_lsn = None
+    for f in abs_files:
+        pf = pq.ParquetFile(f)
+        rows += pf.metadata.num_rows
+        t = pf.read(columns=[_TOMBSTONE, "_max_lsn"])
+        deletes += pc.sum(t[_TOMBSTONE]).as_py() or 0
+        m = pc.max(t["_max_lsn"]).as_py()
+        if m is not None and (max_lsn is None or m > max_lsn):
+            max_lsn = m
+    return rows, deletes, max_lsn
 
 
 def _enc_stat(v):
@@ -4935,7 +4954,6 @@ class SnapshotTable(LakeTable):
         self,
         batch: DataFrame,
         epoch_id: int | str,
-        stats_source: DataFrame | None = None,
         pre_stats: list | None = None,
         auto_compact_files: int | None = None,
         auto_cluster_files: int | None = None,
@@ -4947,12 +4965,12 @@ class SnapshotTable(LakeTable):
         ``collapse_lww`` first), an ``op`` column, key + order + payload
         columns. Replaying a committed ``epoch_id`` is a no-op.
 
-        ``stats_source``: optional raw (pre-collapse) change DataFrame. The
-        affected-bucket/max-LSN pre-pass aggregates it directly — a pure
-        map-side-combined scan — instead of re-executing the collapse plan a
-        second time (the collapsed ``batch`` is lazy; every action replays its
-        whole lineage). Affected buckets and max LSN are identical computed
-        from either side since collapse preserves the key set.
+        ``pre_stats``: copy-on-write only — the caller's
+        :func:`compute_bucket_stats` rows over the raw batch, used as the
+        affected-bucket/max-LSN pre-pass instead of aggregating the
+        collapsed ``batch`` again (it is lazy; every action replays its whole
+        lineage). Merge-on-read ignores it: its per-bucket stats come from
+        the epoch's own delta files after the write.
 
         ``stage=True`` runs the FULL merge (collapse, constraints, write,
         lineage) but stops short of the snapshot commit: the would-be
@@ -4974,8 +4992,6 @@ class SnapshotTable(LakeTable):
         # sources lagging a rename_column deliver under the old name —
         # map them onto the current schema before any schema work
         batch = self._canonicalize_batch_columns(batch)
-        if stats_source is not None:
-            stats_source = self._canonicalize_batch_columns(stats_source)
         # generated columns the batch omits are computed here (map-side,
         # fused); supplied ones are validated by their implicit gen_*
         # fail constraint in the block below
@@ -4985,12 +5001,11 @@ class SnapshotTable(LakeTable):
         # (Observation = CollectMetrics, map-side conditional sums — zero
         # extra passes); drop/quarantine-mode rows are filtered BEFORE the
         # pre-pass so bucket stats and the write see only kept rows.
-        # stats_source rows are deliberately NOT filtered: they only drive
-        # the affected-bucket superset, and a superset is correct (an
-        # untouched bucket rewrites to identical content under CoW, is
-        # simply absent under MoR). Quarantine violators are captured as a
-        # SEPARATE pre-observe plan, executed only if the write job's
-        # counts say any exist (see the verdicts block below).
+        # A caller's pre_stats are NOT filtered: they only drive the CoW
+        # affected-bucket superset, and a superset is correct (an untouched
+        # bucket rewrites to identical content). Quarantine violators are
+        # captured as a SEPARATE pre-observe plan, executed only if the
+        # write job's counts say any exist (see the verdicts block below).
         _cons = self._snapshot.get("constraints", {})
         _c_obs = None
         _q_names = [n for n, c in _cons.items() if c["mode"] == "quarantine"]
@@ -5039,48 +5054,41 @@ class SnapshotTable(LakeTable):
         value_cols = [f.name for f in new_schema.fields if f.name not in key]
 
         mor = self.mode == "mor"
-        # Merge-on-read never reads the existing side, so nothing about the
-        # write PLAN depends on which buckets the batch touches — the
-        # affected-bucket set and per-bucket max LSN can ride the write job's
-        # CollectMetrics instead of a separate pre-scan + collect barrier.
-        # One full pass over the batch, not two. CoW cannot defer: it must
-        # know the affected buckets BEFORE the write to prune which existing
-        # files to read and rewrite.
-        defer_stats = mor and pre_stats is None and stats_source is None
-
-        # ---- pre-pass: affected buckets + per-bucket incoming max lsn -----
-        # One map-side-combined aggregate over the collapsed batch; drives
-        # bucket pruning (which existing files to read / rewrite) and the
-        # resume watermark (max LSN seen per partition) for lineage.
+        # ---- CoW pre-pass: affected buckets + per-bucket incoming max lsn.
+        # CoW must know the affected buckets BEFORE the write to prune which
+        # existing files to read and rewrite: the caller's pre_stats, or one
+        # map-side-combined aggregate over the collapsed batch. Merge-on-read
+        # never reads the existing side, so nothing about its write PLAN
+        # depends on which buckets the batch touches — its affected set,
+        # counts and max LSN all come from the delta files the write
+        # produces (see the lineage block after the write).
         _t0 = time.perf_counter()
-        if defer_stats:
-            pre = None
-        elif pre_stats is not None:
-            # caller already ran compute_bucket_stats on the raw batch
+        affected: list[int] | None = None  # MoR: resolved after the write
+        max_lsn_by_bucket: dict[int, int | None] = {}
+        max_lsn = None
+        if not mor:
             pre = pre_stats
-        elif stats_source is not None:
-            pre = compute_bucket_stats(stats_source, bucket_col, nb)
-        else:
-            b = batch.withColumn("_bucket", _bucket_expr(bucket_col, nb))
-            lsn_col = "_max_lsn" if has_max_lsn else "lsn"
-            lsn_src = (
-                F.col(lsn_col) if lsn_col in batch.columns else F.lit(None).cast("long")
-            )
-            pre = (
-                b.groupBy("_bucket")
-                .agg(F.count(F.lit(1)).alias("n_in"), F.max(lsn_src).alias("max_lsn"))
-                .collect()
-            )
-        _timings = {"pre_pass": round(time.perf_counter() - _t0, 3)}
-        if defer_stats:
-            affected: list[int] | None = None  # resolved from write metrics
-            max_lsn_by_bucket: dict[int, int | None] = {}
-            max_lsn = None
-        else:
+            if pre is None:
+                b = batch.withColumn("_bucket", _bucket_expr(bucket_col, nb))
+                lsn_col = "_max_lsn" if has_max_lsn else "lsn"
+                lsn_src = (
+                    F.col(lsn_col)
+                    if lsn_col in batch.columns
+                    else F.lit(None).cast("long")
+                )
+                pre = (
+                    b.groupBy("_bucket")
+                    .agg(
+                        F.count(F.lit(1)).alias("n_in"),
+                        F.max(lsn_src).alias("max_lsn"),
+                    )
+                    .collect()
+                )
             affected = sorted(r["_bucket"] for r in pre)
             max_lsn_by_bucket = {r["_bucket"]: r["max_lsn"] for r in pre}
             max_lsn_vals = [v for v in max_lsn_by_bucket.values() if v is not None]
             max_lsn = int(max(max_lsn_vals)) if max_lsn_vals else None
+        _timings = {"pre_pass": round(time.perf_counter() - _t0, 3)}
 
         have = set(batch.columns)
         field_type = {f.name: f.dataType for f in new_schema.fields}
@@ -5096,10 +5104,10 @@ class SnapshotTable(LakeTable):
             ],
             F.col("op").alias("_in_op"),
             *(
-                # deferred stats need max-LSN-SEEN per bucket (incl. collapsed
+                # MoR lineage needs max-LSN-SEEN per bucket (incl. collapsed
                 # losers — a loser can carry a higher lsn than the LWW winner
                 # when ts and lsn interleave), so carry the collapse's
-                # _max_lsn through to the write job's CollectMetrics.
+                # _max_lsn into the delta files' _max_lsn helper column.
                 [
                     (
                         F.col("_max_lsn")
@@ -5187,14 +5195,12 @@ class SnapshotTable(LakeTable):
         applied = skipped = deleted = 0
         lin_by_bucket: dict[int, tuple[int, int, int]] = {}
         # whether ANY action will have executed the (observed) batch plan:
-        # the write job (affected is None = deferred MoR stats, or a
-        # non-empty affected set), or the batch-path pre-pass collect.
+        # the write job (always under MoR; under CoW iff the affected set is
+        # non-empty), or the CoW batch-path pre-pass collect.
         # Observation.get BLOCKS until an action completes — never read it
         # when no action ran (then the batch was empty: zero violations).
         _cons_counted = bool(_cons) and (
-            affected is None
-            or bool(affected)
-            or (pre_stats is None and stats_source is None and not defer_stats)
+            mor or bool(affected) or pre_stats is None
         )
         rel_dir = os.path.join("data", f"epoch={_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}")
         out_dir = os.path.join(self.path, rel_dir)
@@ -5209,12 +5215,11 @@ class SnapshotTable(LakeTable):
                 # ~0.65, dominating the N->4N efficiency loss). Instead the
                 # delta files carry a ``_max_lsn`` helper column (max LSN
                 # SEEN per key incl. collapsed losers) next to ``_tombstone``,
-                # and per-bucket lineage comes from one column-pruned stats
-                # job over the just-written epoch delta (page-cache hot,
-                # O(batch) narrow columns) after the write — same exact
-                # numbers, a fraction of the cost. read()/compact() use the
-                # explicit storage schema, so the helper column is invisible
-                # downstream.
+                # and per-bucket lineage is read back from those two columns
+                # of the just-written epoch delta on the driver (see
+                # _delta_lineage) — no second Spark job. read()/compact() use
+                # the explicit storage schema, so the helper column is
+                # invisible downstream.
                 survivors = resolved.select(
                     *key,
                     "_bucket",
@@ -5292,33 +5297,19 @@ class SnapshotTable(LakeTable):
             epoch_files = self._bucket_outputs(rel_dir)
             _timings["write"] = round(time.perf_counter() - _t0, 3)
             if mor:
-                # ---- per-bucket lineage from the epoch delta just written:
-                # one pruned scan of (_bucket, _tombstone, _max_lsn) —
-                # MoR appends are insert-only (verdict is apply|delete,
-                # never skip), so applied = rows - deletes exactly.
+                # ---- per-bucket lineage from the epoch delta just written,
+                # read on the driver (the files are page-cache hot and
+                # _enrich_snapshot opens them again at commit) — MoR appends
+                # are insert-only (verdict is apply|delete, never skip), so
+                # applied = rows - deletes exactly.
                 _t0 = time.perf_counter()
-                if epoch_files:
-                    srows = (
-                        self.spark.read.parquet(out_dir)
-                        .groupBy("_bucket")
-                        .agg(
-                            F.count(F.lit(1)).alias("_n"),
-                            F.sum(
-                                F.when(F.col(_TOMBSTONE), 1).otherwise(0)
-                            ).alias("_d"),
-                            F.max("_max_lsn").alias("_l"),
-                        )
-                        .collect()
+                for b_, files in epoch_files.items():
+                    rows, dl, mx = _delta_lineage(
+                        [os.path.join(self.path, f) for f in files]
                     )
-                    for r in srows:
-                        bk = int(r["_bucket"])
-                        dl = int(r["_d"])
-                        lin_by_bucket[bk] = (int(r["_n"]) - dl, 0, dl)
-                        max_lsn_by_bucket[bk] = (
-                            int(r["_l"]) if r["_l"] is not None else None
-                        )
-                if defer_stats:
-                    affected = sorted(lin_by_bucket)
+                    lin_by_bucket[int(b_)] = (rows - dl, 0, dl)
+                    max_lsn_by_bucket[int(b_)] = mx
+                affected = sorted(lin_by_bucket)
                 vals = [v for v in max_lsn_by_bucket.values() if v is not None]
                 if vals:
                     max_lsn = int(max(vals))
@@ -5327,7 +5318,7 @@ class SnapshotTable(LakeTable):
                 # F.sum over ZERO observed rows is NULL, not 0 — reachable
                 # when a drop/quarantine constraint filters every batch row
                 # of an affected bucket (the bucket still rewrites: the
-                # affected set comes from the unfiltered stats_source)
+                # affected set comes from the caller's unfiltered pre_stats)
                 metrics = obs.get
                 for bk in affected:
                     a, sk, dl = metrics[f"a_{bk}"], metrics[f"s_{bk}"], metrics[f"d_{bk}"]

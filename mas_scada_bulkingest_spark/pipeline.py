@@ -126,8 +126,9 @@ def apply_changes(
         # gate — a conversation can only be hot if its whole BUCKET exceeds
         # the threshold, so the per-conversation detection scan runs only
         # when some bucket count crosses it. Merge-on-read with the plain
-        # strategy skips the pre-pass entirely: bucket stats ride the write
-        # job's CollectMetrics (SnapshotTable.merge_changes defer_stats).
+        # strategy skips the pre-pass entirely: merge_changes ignores
+        # pre_stats under MoR and takes its per-bucket stats from the delta
+        # files its write produced.
         pre = compute_bucket_stats(parsed, bucket_col, table.n_buckets)
     if strategy == "salted" and two_phase is None:
         threshold = hot_key_threshold or 100_000

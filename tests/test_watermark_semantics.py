@@ -86,3 +86,33 @@ def test_late_drop_bound_is_two_batch_lagged_eviction(spark, tmpdir_path):
         m(180): 1,  # 03:30
         # b3's 00:35 row dropped (evicted window); sentinel window unemitted
     }
+
+
+def test_arrival_jitter_agrees_across_engines_past_int64_product(spark):
+    """The watermark stream's arrival jitter is computed by Spark for the
+    micro-batch layout and by DuckDB in the oracle. ``event_id * 2654435761``
+    leaves int64 once event_id passes ~3.5e9 (Spark wraps or, under ANSI,
+    raises; DuckDB widens), so both sides reduce event_id mod 97 first and
+    must still give ``(event_id * 2654435761) % 97 - 48`` exactly."""
+    import duckdb
+
+    from mas_scada_bulkingest_spark import cdc_queries as cq
+
+    ids = [0, 1, 48, 96, 97, 211, 9_999, 123_457, 3_500_000_000, 5_000_000_000]
+    want = {i: (i * 2654435761) % 97 - 48 for i in ids}
+    got_spark = dict(
+        spark.createDataFrame([(i,) for i in ids], "event_id long")
+        .select("event_id", cq._wm_jitter(F.col("event_id")))
+        .collect()
+    )
+    values = ", ".join(f"({i}::BIGINT)" for i in ids)
+    got_duck = dict(
+        duckdb.connect()
+        .execute(
+            f"SELECT event_id, {cq._SQL_WM_JITTER} "
+            f"FROM (VALUES {values}) v(event_id)"
+        )
+        .fetchall()
+    )
+    assert got_spark == want
+    assert got_duck == want
