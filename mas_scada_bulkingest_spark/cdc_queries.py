@@ -137,6 +137,27 @@ def _cache_lookup(cache: dict, key: str):
     return None
 
 
+def _hash_off(x):
+    """``(x * 2654435761) % 100000``, the changelog's multiplicative-hash
+    time offset, with x reduced mod 10^5 BEFORE the multiply: the product
+    stays below 10^5 * 35761, so no int64 wrap (or ANSI overflow error)
+    however large event_id / lsn grows, and the value is the same for every
+    x. DuckDB mirrors: the ``ts`` line of :data:`_SQL_CHANGES` /
+    ``_SQL_DEBEZIUM_PARSE`` and :data:`_SQL_ORD`; keep them in lockstep.
+    (The ``ts`` mirrors build the interval with ``to_seconds``: DuckDB's
+    ``x * INTERVAL 1 SECOND`` narrows x to INT32 and fails past 2^31.)"""
+    return F.pmod(
+        F.pmod(x, F.lit(100000)) * F.lit(2654435761 % 100000), F.lit(100000)
+    )
+
+
+#: DuckDB ord: packs (ts, lsn) into one comparable BIGINT, the offset term
+#: reduced like :func:`_hash_off` (see the _SQL_CDC_LINEAGE note)
+_SQL_ORD = (
+    "(lsn + ((lsn % 100000) * (2654435761 % 100000)) % 100000) * 10000000 + lsn"
+)
+
+
 def _events_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic changelog derived from ``events`` (see module doc).
 
@@ -145,9 +166,7 @@ def _events_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     is_del = F.col("event_type") == "error"
-    s_off = F.col("event_id") + F.pmod(
-        F.col("event_id") * F.lit(2654435761), F.lit(100000)
-    )
+    s_off = F.col("event_id") + _hash_off(F.col("event_id"))
     ts = F.lit("2024-01-01 00:00:00").cast("timestamp_ntz") + F.make_dt_interval(
         secs=s_off
     )
@@ -182,7 +201,9 @@ _SQL_CHANGES = """
            CASE WHEN event_type = 'error' THEN NULL
                 WHEN event_type = 'click' THEN 'search' END AS tool,
            TIMESTAMP '2024-01-01 00:00:00'
-             + (event_id + (event_id * 2654435761) % 100000) * INTERVAL 1 SECOND AS ts,
+             + to_seconds(event_id
+                          + ((event_id % 100000) * (2654435761 % 100000)) % 100000)
+               AS ts,
            CAST(event_id % 4 AS BIGINT) AS epoch
     FROM events
   )
@@ -584,7 +605,7 @@ WITH {_SQL_CHANGES_BLOCKED},
     FROM changes
   ),
   w AS (
-    SELECT *, (lsn + (lsn * 2654435761) % 100000) * 10000000 + lsn AS ord
+    SELECT *, {_SQL_ORD} AS ord
     FROM ranked WHERE rn = 1
   ),
   p AS (
@@ -1136,9 +1157,7 @@ def q_debezium_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     is_del = F.col("event_type") == "error"
     is_create = F.pmod(F.col("event_id"), F.lit(3)) == 0
-    s_off = F.col("event_id") + F.pmod(
-        F.col("event_id") * F.lit(2654435761), F.lit(100000)
-    )
+    s_off = F.col("event_id") + _hash_off(F.col("event_id"))
     payload = F.struct(
         F.concat(F.lit("conv-"), F.col("user_id").cast("string")).alias("conv_id"),
         F.pmod(F.col("event_id"), F.lit(8)).cast("int").alias("turn_idx"),
@@ -1195,7 +1214,9 @@ WITH changes AS (
            CASE WHEN event_type = 'error' THEN NULL
                 WHEN event_type = 'click' THEN 'search' END AS tool,
            TIMESTAMP '2024-01-01 00:00:00'
-             + (event_id + (event_id * 2654435761) % 100000) * INTERVAL 1 SECOND AS ts
+             + to_seconds(event_id
+                          + ((event_id % 100000) * (2654435761 % 100000)) % 100000)
+               AS ts
     FROM events
     WHERE event_id % 7 <> 3  -- truncated envelopes the parser must drop
 ), ranked AS (
@@ -1625,7 +1646,7 @@ def q_cdc_lineage_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_CDC_LINEAGE = f"""
 WITH {_SQL_CHANGES},
   o AS (
-    SELECT *, (lsn + (lsn * 2654435761) % 100000) * 10000000 + lsn AS ord
+    SELECT *, {_SQL_ORD} AS ord
     FROM changes
   ),
   w AS (
@@ -1658,7 +1679,7 @@ FROM p GROUP BY epoch
 _SQL_CDC_LINEAGE_MOR = f"""
 WITH {_SQL_CHANGES},
   o AS (
-    SELECT *, (lsn + (lsn * 2654435761) % 100000) * 10000000 + lsn AS ord
+    SELECT *, {_SQL_ORD} AS ord
     FROM changes
   ),
   w AS (
@@ -2307,7 +2328,7 @@ _SQL_CDC_SPARSE_STATE = f"""
 WITH {_SQL_CHANGES},
   sparse AS (
     SELECT conv_id, turn_idx, lsn,
-           (lsn + (lsn * 2654435761) % 100000) * 10000000 + lsn AS ord,
+           {_SQL_ORD} AS ord,
            CASE WHEN lsn % 3 <> 2 THEN role END AS role,
            CASE WHEN lsn % 3 <> 1 THEN text END AS text
     FROM changes WHERE op <> 'delete'
@@ -2421,7 +2442,7 @@ WITH {_SQL_CHANGES_BLOCKED},
     FROM changes
   ),
   w AS (
-    SELECT *, (lsn + (lsn * 2654435761) % 100000) * 10000000 + lsn AS ord
+    SELECT *, {_SQL_ORD} AS ord
     FROM ranked WHERE rn = 1
   ),
   p AS (

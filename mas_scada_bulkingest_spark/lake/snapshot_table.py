@@ -52,7 +52,6 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from datetime import datetime
@@ -70,6 +69,15 @@ from ..schemas import (
     MERGE_KEY,
 )
 from .base import LakeTable
+from .side_logs import (
+    LINEAGE_LOG,
+    METRICS_LOG,
+    compact_log,
+    lineage_epoch_keys,
+    read_constraint_metrics,
+    read_lineage,
+    write_log,
+)
 
 _CURRENT = "_CURRENT"
 
@@ -2183,24 +2191,10 @@ class SnapshotTable(LakeTable):
 
         # lineage rows whose epoch never committed (crash debris)
         committed = self.committed_epochs
-        lin_dir = os.path.join(self.path, "lineage")
-        uncommitted: list[str] = []
-        if any(f.endswith(".parquet") for f in os.listdir(lin_dir)):
-            keys = [
-                r["k"]
-                for r in self.spark.read.schema(LINEAGE_SCHEMA)
-                .parquet(lin_dir)
-                .select(
-                    F.coalesce(F.col("epoch_key"), F.col("epoch_id").cast("string")).alias("k")
-                )
-                .distinct()
-                .collect()
-            ]
-            all_uncommitted = sorted(k for k in keys if k not in committed)
-            uncommitted = all_uncommitted[:20]
-            uncommitted_total = len(all_uncommitted)
-        else:
-            uncommitted_total = 0
+        keys = set(lineage_epoch_keys(read_lineage(self.path)).to_pylist())
+        all_uncommitted = sorted(k for k in keys if k not in committed)
+        uncommitted = all_uncommitted[:20]
+        uncommitted_total = len(all_uncommitted)
 
         # orphans: on disk under data/, referenced by NO retained snapshot
         # (staged WAP epochs count as references — an unpublished audit's
@@ -2560,22 +2554,9 @@ class SnapshotTable(LakeTable):
         therefore see ONE row per (epoch_key, partition_id): keep the
         newest by committed_ts (the replay's rows describe the same merge;
         duplicates would double every downstream sum — status(),
-        epoch_summary(), the lineage oracles)."""
-        lin_dir = os.path.join(self.path, "lineage")
-        if not any(f.endswith(".parquet") for f in os.listdir(lin_dir)):
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        from pyspark.sql import Window
-
-        df = self.spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
-        w = Window.partitionBy(
-            F.coalesce(F.col("epoch_key"), F.col("epoch_id").cast("string")),
-            "partition_id",
-        ).orderBy(F.col("committed_ts").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        epoch_summary(), the lineage oracles). The dedup runs on the driver
+        (:func:`~.side_logs.read_lineage`); this wraps its rows."""
+        return self.spark.createDataFrame(read_lineage(self.path), LINEAGE_SCHEMA)
 
     def _append_constraint_metrics(self, epoch_id, violations: dict) -> None:
         """Persist this epoch's per-constraint violation counts — the DLT
@@ -2591,35 +2572,20 @@ class SnapshotTable(LakeTable):
         cons = self._snapshot.get("constraints", {})
         if not cons or not violations:
             return
-        mdir = os.path.join(self.path, "metrics")
-        os.makedirs(mdir, exist_ok=True)
         names = sorted(violations)
-        now = datetime.now()
-        tbl = pa.table(
+        n = len(names)
+        write_log(
+            self.path,
+            METRICS_LOG,
+            _epoch_num(epoch_id),
             {
-                "epoch_id": pa.array(
-                    [_epoch_num(epoch_id)] * len(names), pa.int64()
-                ),
-                "epoch_key": pa.array(
-                    [_epoch_key(epoch_id)] * len(names), pa.string()
-                ),
-                "constraint_name": pa.array(names, pa.string()),
-                "mode": pa.array(
-                    [cons.get(n, {}).get("mode", "") for n in names],
-                    pa.string(),
-                ),
-                "violations": pa.array(
-                    [int(violations[n]) for n in names], pa.int64()
-                ),
-                "committed_ts": pa.array([now] * len(names), pa.timestamp("us")),
-            }
-        )
-        pq.write_table(
-            tbl,
-            os.path.join(
-                mdir,
-                f"constraints-{_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}.parquet",
-            ),
+                "epoch_id": [_epoch_num(epoch_id)] * n,
+                "epoch_key": [_epoch_key(epoch_id)] * n,
+                "constraint_name": names,
+                "mode": [cons.get(c, {}).get("mode", "") for c in names],
+                "violations": [int(violations[c]) for c in names],
+                "committed_ts": [datetime.now()] * n,
+            },
         )
 
     def constraint_metrics(self) -> DataFrame:
@@ -2631,71 +2597,28 @@ class SnapshotTable(LakeTable):
         ``committed_ts`` wins, the same dedup contract as
         :meth:`lineage`. Empty DataFrame when the table has never had
         constraints."""
-        mdir = os.path.join(self.path, "metrics")
-        if not os.path.isdir(mdir) or not any(
-            f.endswith(".parquet") for f in os.listdir(mdir)
-        ):
-            return self.spark.createDataFrame([], CONSTRAINT_METRICS_SCHEMA)
-        from pyspark.sql import Window
-
-        df = self.spark.read.schema(CONSTRAINT_METRICS_SCHEMA).parquet(mdir)
-        w = Window.partitionBy("epoch_key", "constraint_name").orderBy(
-            F.col("committed_ts").desc()
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        return self.spark.createDataFrame(
+            read_constraint_metrics(self.path), CONSTRAINT_METRICS_SCHEMA
         )
 
     def compact_lineage(self) -> int:
         """Merge the per-epoch lineage files into one parquet file.
 
         Every epoch appends its own sub-KB lineage file, so at 10^4+ epochs
-        the lineage directory holds 10^4 tiny files and every ``status()`` /
-        ``epoch_summary`` scan pays a per-file open. Compaction materializes
-        the DEDUPED view (``lineage()``) into one file, then deletes exactly
-        the input files listed BEFORE the rewrite. Crash-safe because
-        lineage reads collapse duplicates per (epoch_key, partition_id): a
-        crash that leaves both the merged file and some originals only
-        re-creates duplicates the reader already hides. A merge appending
-        a NEW epoch concurrently is also safe — its file was not in the
-        input listing and is never deleted. Returns input files removed.
+        the lineage directory holds 10^4 tiny files and every ``status()``
+        / ``lineage()`` read opens each one on the driver. Compaction writes
+        the DEDUPED rows (:func:`~.side_logs.read_lineage`) into one file,
+        then deletes exactly the input files listed BEFORE the rewrite.
+        Crash-safe because lineage reads collapse duplicates per
+        (epoch_key, partition_id): a crash that leaves both the merged file
+        and some originals only re-creates duplicates the reader already
+        hides. A merge appending a NEW epoch concurrently is also safe — its
+        file was not in the input listing and is never deleted. Returns
+        input files removed (lineage plus constraint metrics).
         """
-        lin_dir = os.path.join(self.path, "lineage")
-        inputs = [f for f in os.listdir(lin_dir) if f.endswith(".parquet")]
-        if len(inputs) <= 1:
-            return self.compact_constraint_metrics()
-        rows = self.lineage().collect()  # deduped; O(epochs x buckets)
-        merged = pa.table(
-            {
-                "epoch_id": pa.array([r["epoch_id"] for r in rows], pa.int64()),
-                "epoch_key": pa.array([r["epoch_key"] for r in rows], pa.string()),
-                "partition_id": pa.array(
-                    [r["partition_id"] for r in rows], pa.int32()
-                ),
-                "applied": pa.array([r["applied"] for r in rows], pa.int64()),
-                "skipped": pa.array([r["skipped"] for r in rows], pa.int64()),
-                "deleted": pa.array([r["deleted"] for r in rows], pa.int64()),
-                "max_lsn": pa.array([r["max_lsn"] for r in rows], pa.int64()),
-                "wall_secs": pa.array(
-                    [r["wall_secs"] for r in rows], pa.float64()
-                ),
-                "committed_ts": pa.array(
-                    [r["committed_ts"] for r in rows], pa.timestamp("us")
-                ),
-            }
+        return compact_log(self.path, LINEAGE_LOG, read_lineage) + (
+            self.compact_constraint_metrics()
         )
-        out = os.path.join(
-            lin_dir, f"lineage-compact-{uuid.uuid4().hex[:8]}.parquet"
-        )
-        pq.write_table(merged, out)
-        for fn in inputs:
-            try:
-                os.remove(os.path.join(lin_dir, fn))
-            except FileNotFoundError:
-                pass
-        return len(inputs) + self.compact_constraint_metrics()
 
     def compact_constraint_metrics(self) -> int:
         """Fold the per-epoch constraint-metrics files into one parquet —
@@ -2703,45 +2626,8 @@ class SnapshotTable(LakeTable):
         (same at-least-once append + reader-dedup contract, same 10^4-
         tiny-files problem at 10^4 epochs). ``compact_lineage`` calls it;
         standalone use is fine too. Returns input files removed."""
-        mdir = os.path.join(self.path, "metrics")
-        if not os.path.isdir(mdir):
-            return 0
-        inputs = [f for f in os.listdir(mdir) if f.endswith(".parquet")]
-        if len(inputs) <= 1:
-            return 0
-        rows = self.constraint_metrics().collect()
-        merged = pa.table(
-            {
-                "epoch_id": pa.array([r["epoch_id"] for r in rows], pa.int64()),
-                "epoch_key": pa.array(
-                    [r["epoch_key"] for r in rows], pa.string()
-                ),
-                "constraint_name": pa.array(
-                    [r["constraint_name"] for r in rows], pa.string()
-                ),
-                "mode": pa.array([r["mode"] for r in rows], pa.string()),
-                "violations": pa.array(
-                    [r["violations"] for r in rows], pa.int64()
-                ),
-                "committed_ts": pa.array(
-                    [r["committed_ts"] for r in rows], pa.timestamp("us")
-                ),
-            }
-        )
-        pq.write_table(
-            merged,
-            os.path.join(
-                mdir, f"constraints-compact-{uuid.uuid4().hex[:8]}.parquet"
-            ),
-        )
-        for fn in inputs:
-            try:
-                os.remove(os.path.join(mdir, fn))
-            except FileNotFoundError:
-                pass
-        return len(inputs)
+        return compact_log(self.path, METRICS_LOG, read_constraint_metrics)
 
-    # ----------------------------------------------------------- maintenance
     def vacuum(
         self,
         retain_versions: int = 1,
@@ -4791,42 +4677,23 @@ class SnapshotTable(LakeTable):
         now = datetime.now()
         wall = round(time.perf_counter() - t0, 3)
         if lin_by_bucket:
-            lin_table = pa.table(
+            bks = sorted(lin_by_bucket)
+            n = len(bks)
+            write_log(
+                self.path,
+                LINEAGE_LOG,
+                _epoch_num(epoch_id),
                 {
-                    "epoch_id": pa.array(
-                        [_epoch_num(epoch_id)] * len(lin_by_bucket), pa.int64()
-                    ),
-                    "epoch_key": pa.array(
-                        [_epoch_key(epoch_id)] * len(lin_by_bucket), pa.string()
-                    ),
-                    "partition_id": pa.array(
-                        [b for b in sorted(lin_by_bucket)], pa.int32()
-                    ),
-                    "applied": pa.array(
-                        [lin_by_bucket[b][0] for b in sorted(lin_by_bucket)],
-                        pa.int64(),
-                    ),
-                    "skipped": pa.array([0] * len(lin_by_bucket), pa.int64()),
-                    "deleted": pa.array([0] * len(lin_by_bucket), pa.int64()),
-                    "max_lsn": pa.array(
-                        [lin_by_bucket[b][1] for b in sorted(lin_by_bucket)],
-                        pa.int64(),
-                    ),
-                    "wall_secs": pa.array(
-                        [wall] * len(lin_by_bucket), pa.float64()
-                    ),
-                    "committed_ts": pa.array(
-                        [now] * len(lin_by_bucket), pa.timestamp("us")
-                    ),
-                }
-            )
-            pq.write_table(
-                lin_table,
-                os.path.join(
-                    self.path,
-                    "lineage",
-                    f"lineage-{_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}.parquet",
-                ),
+                    "epoch_id": [_epoch_num(epoch_id)] * n,
+                    "epoch_key": [_epoch_key(epoch_id)] * n,
+                    "partition_id": bks,
+                    "applied": [lin_by_bucket[b][0] for b in bks],
+                    "skipped": [0] * n,
+                    "deleted": [0] * n,
+                    "max_lsn": [lin_by_bucket[b][1] for b in bks],
+                    "wall_secs": [wall] * n,
+                    "committed_ts": [now] * n,
+                },
             )
 
         def build(cur: dict) -> dict | None:
@@ -5385,53 +5252,33 @@ class SnapshotTable(LakeTable):
         # here re-appends on replay, and readers key lineage by epoch_key) ---
         now = datetime.now()
         wall = round(time.perf_counter() - _merge_t0, 3)
-        lin_rows = [
-            (
-                _epoch_num(epoch_id),
-                int(bk),
-                int(a),
-                int(sk),
-                int(dl),
-                (
-                    int(max_lsn_by_bucket[bk])
-                    if bk in max_lsn_by_bucket and max_lsn_by_bucket[bk] is not None
-                    else (max_lsn if bk == -1 else None)
-                ),
-                now,
-            )
-            for bk, (a, sk, dl) in sorted(lin_by_bucket.items())
-        ]
+        bks = sorted(lin_by_bucket)
+        n = len(bks)
         _t0 = time.perf_counter()
-        if lin_rows:
+        if bks:
             # Direct pyarrow append: lineage is a handful of local rows per
             # epoch; a Spark job (local relation -> python worker -> write
             # task) costs seconds of fixed overhead for a sub-KB file.
-            lin_table = pa.table(
+            write_log(
+                self.path,
+                LINEAGE_LOG,
+                _epoch_num(epoch_id),
                 {
-                    "epoch_id": pa.array([r[0] for r in lin_rows], pa.int64()),
-                    "epoch_key": pa.array(
-                        [_epoch_key(epoch_id)] * len(lin_rows), pa.string()
-                    ),
-                    "partition_id": pa.array([r[1] for r in lin_rows], pa.int32()),
-                    "applied": pa.array([r[2] for r in lin_rows], pa.int64()),
-                    "skipped": pa.array([r[3] for r in lin_rows], pa.int64()),
-                    "deleted": pa.array([r[4] for r in lin_rows], pa.int64()),
-                    "max_lsn": pa.array([r[5] for r in lin_rows], pa.int64()),
-                    "wall_secs": pa.array(
-                        [wall] * len(lin_rows), pa.float64()
-                    ),
-                    "committed_ts": pa.array(
-                        [r[6] for r in lin_rows], pa.timestamp("us")
-                    ),
-                }
-            )
-            pq.write_table(
-                lin_table,
-                os.path.join(
-                    self.path,
-                    "lineage",
-                    f"lineage-{_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}.parquet",
-                ),
+                    "epoch_id": [_epoch_num(epoch_id)] * n,
+                    "epoch_key": [_epoch_key(epoch_id)] * n,
+                    "partition_id": [int(bk) for bk in bks],
+                    "applied": [int(lin_by_bucket[bk][0]) for bk in bks],
+                    "skipped": [int(lin_by_bucket[bk][1]) for bk in bks],
+                    "deleted": [int(lin_by_bucket[bk][2]) for bk in bks],
+                    "max_lsn": [
+                        int(max_lsn_by_bucket[bk])
+                        if max_lsn_by_bucket.get(bk) is not None
+                        else (max_lsn if bk == -1 else None)
+                        for bk in bks
+                    ],
+                    "wall_secs": [wall] * n,
+                    "committed_ts": [now] * n,
+                },
             )
         _timings["lineage"] = round(time.perf_counter() - _t0, 3)
 

@@ -91,7 +91,9 @@ REGISTRY_ORDER = ("neg_lsn",)
 # ---------------------------------------------------------------------------
 # A4. _lineage — per-epoch per-partition lineage (north_rule requirement;
 # generalizes the reference's offset JSON metrics + 60s stats heartbeat,
-# OffsetRecord.java:281-291, ConnectorStats.java:59-83).
+# OffsetRecord.java:281-291, ConnectorStats.java:59-83). The on-disk Arrow
+# twin, used by every writer and the reader, is
+# lake/side_logs.LINEAGE_ARROW_SCHEMA; keep the two in lockstep.
 # ---------------------------------------------------------------------------
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -117,7 +119,8 @@ LINEAGE_SCHEMA = T.StructType(
 # Per-epoch CHECK-constraint violation counts (the DLT expectations
 # event-log analog): one row per (epoch, constraint), appended by the merge
 # before the snapshot commit — at-least-once like lineage, deduped by the
-# reader on (epoch_key, constraint).
+# reader on (epoch_key, constraint). Arrow twin:
+# lake/side_logs.METRICS_ARROW_SCHEMA.
 # ---------------------------------------------------------------------------
 CONSTRAINT_METRICS_SCHEMA = T.StructType(
     [

@@ -5,12 +5,15 @@
 from __future__ import annotations
 
 import json
+import time
 import urllib.error
 import urllib.request
+from datetime import datetime
 
 import pytest
 
-from mas_scada_bulkingest_spark.pipeline import create_transcripts_table
+from mas_scada_bulkingest_spark import status as status_mod
+from mas_scada_bulkingest_spark.pipeline import apply_changes, create_transcripts_table
 from mas_scada_bulkingest_spark.sources import generate_changelog
 from mas_scada_bulkingest_spark.status import serve_status, status
 from mas_scada_bulkingest_spark.streaming.driver import (
@@ -138,3 +141,84 @@ def test_loglevel_endpoint_flips_live(spark, tmpdir_path):
     finally:
         srv.shutdown()
         spark.sparkContext.setLogLevel("ERROR")
+
+
+def _scrape(port: int, path: str):
+    with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}", timeout=30) as r:
+        return r.headers, r.read().decode()
+
+
+def _epoch(spark, tbl, e: int) -> None:
+    rows = [
+        (e * 10 + k, "update", f"c{k}", k, "u", f"t{e}", None, datetime(2024, 1, 1))
+        for k in range(4)
+    ]
+    apply_changes(
+        tbl,
+        spark.createDataFrame(
+            rows,
+            "lsn long, op string, conv_id string, turn_idx int, role string, "
+            "text string, tool string, ts timestamp_ntz",
+        ),
+        e,
+    )
+
+
+def test_last_commit_gauge_flags_a_stalled_stream(spark, tmpdir_path):
+    """``cdc_ingest_last_commit_unix_s`` is the newest lineage commit as unix
+    seconds: it holds still while nothing commits (so ``time() - gauge``
+    grows) and rises with the next epoch."""
+    tbl = create_transcripts_table(spark, tmpdir_path + "/t", n_buckets=2)
+    _epoch(spark, tbl, 0)
+    srv = serve_status(tbl)
+    try:
+        port = srv.server_port
+
+        def gauge() -> float:
+            _, text = _scrape(port, "/metrics")
+            assert "# TYPE cdc_ingest_last_commit_unix_s gauge" in text
+            (line,) = [
+                ln for ln in text.splitlines()
+                if ln.startswith("cdc_ingest_last_commit_unix_s ")
+            ]
+            return float(line.split(" ")[1])
+
+        first = gauge()
+        assert first == status(tbl)["last_commit_unix_s"]
+        assert abs(time.time() - first) < 600  # real unix time, not local-as-UTC
+        time.sleep(0.05)
+        assert gauge() == first  # no commit between scrapes: stalled
+        _epoch(spark, tbl, 1)
+        assert gauge() > first
+    finally:
+        srv.shutdown()
+
+
+def test_row_cap_truncates_listing_endpoints(spark, tmpdir_path, monkeypatch):
+    """``/epochs``, ``/files`` and ``/partitions`` return at most
+    ``MAX_RESPONSE_ROWS`` rows (the newest epochs for ``/epochs``) and say so
+    with ``X-Truncated: true``."""
+    tbl = create_transcripts_table(spark, tmpdir_path + "/t", n_buckets=4)
+    for e in range(3):
+        _epoch(spark, tbl, e)
+    srv = serve_status(tbl)
+    try:
+        port = srv.server_port
+        full = {}
+        for path in ("/epochs", "/files", "/partitions"):
+            headers, body = _scrape(port, path)
+            assert headers["X-Truncated"] is None, path
+            full[path] = json.loads(body)
+            assert len(full[path]) > 1, path
+        assert [e["epoch_id"] for e in full["/epochs"]] == [0, 1, 2]
+        monkeypatch.setattr(status_mod, "MAX_RESPONSE_ROWS", 1)
+        for path in ("/epochs", "/files", "/partitions"):
+            headers, body = _scrape(port, path)
+            assert headers["X-Truncated"] == "true", path
+            assert len(json.loads(body)) == 1, path
+        _, body = _scrape(port, "/epochs")
+        assert json.loads(body) == full["/epochs"][-1:]  # the newest epoch
+        headers, _ = _scrape(port, "/status")
+        assert headers["X-Truncated"] is None
+    finally:
+        srv.shutdown()

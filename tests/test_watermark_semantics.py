@@ -116,3 +116,44 @@ def test_arrival_jitter_agrees_across_engines_past_int64_product(spark):
     )
     assert got_spark == want
     assert got_duck == want
+
+
+def test_changelog_ts_and_ord_agree_across_engines_past_int64_product(
+    spark, tmpdir_path
+):
+    """The changelog's ``ts`` offset and the oracles' ``ord`` both use
+    ``(x * 2654435761) % 100000`` over ``event_id`` / ``lsn``; the product
+    leaves int64 once x passes ~3.5e9. Spark's ``_events_changelog`` and the
+    DuckDB mirrors (``_SQL_CHANGES``, ``_SQL_ORD``) reduce x mod 10^5 first
+    and must still give the exact unreduced value."""
+    import duckdb
+
+    from mas_scada_bulkingest_spark import cdc_queries as cq
+
+    ids = [0, 1, 99_999, 100_000, 123_457, 3_500_000_000, 4_294_967_296,
+           5_000_000_000]
+    off = {i: (i * 2654435761) % 100000 for i in ids}
+    want_ts = {i: T0 + timedelta(seconds=i + off[i]) for i in ids}
+    want_ord = {i: (i + off[i]) * 10_000_000 + i for i in ids}
+    events = os.path.join(tmpdir_path, "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(ids, pa.int64()),
+                "user_id": pa.array([1] * len(ids), pa.int64()),
+                "event_type": ["click"] * len(ids),
+                "props": ["p"] * len(ids),
+            }
+        ),
+        events,
+    )
+    got_spark = dict(cq._events_changelog(spark, tmpdir_path).select("lsn", "ts").collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{events}'")
+    got_duck = dict(con.execute(f"WITH {cq._SQL_CHANGES} SELECT lsn, ts FROM changes").fetchall())
+    got_ord = dict(
+        con.execute(f"WITH {cq._SQL_CHANGES} SELECT lsn, {cq._SQL_ORD} FROM changes").fetchall()
+    )
+    assert got_spark == want_ts
+    assert got_duck == want_ts
+    assert got_ord == want_ord
