@@ -47,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import struct
 import time
 import uuid
 from contextlib import contextmanager
@@ -497,6 +498,83 @@ def _infer_operation(added_files: list | None) -> str | None:
 
 def _bucket_expr(bucket_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)).cast("int")
+
+
+_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+_U64 = (1 << 64) - 1
+_XXH_SEED = 42  # Spark's xxhash64 seed
+_INT_WIDTH = {T.IntegerType(): 4, T.LongType(): 8}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _XXH_P2) & _U64, 31) * _XXH_P1 & _U64
+
+
+def _xxh64(data: bytes) -> int:
+    """XXH64 of ``data`` under Spark's seed, as an unsigned 64-bit int (the
+    reference algorithm, which Spark's ``XXH64`` implements for strings,
+    ints and longs)."""
+    n, i, seed = len(data), 0, _XXH_SEED
+    if n >= 32:
+        v = [(seed + _XXH_P1 + _XXH_P2) & _U64, (seed + _XXH_P2) & _U64,
+             seed, (seed - _XXH_P1) & _U64]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = sum(_rotl(a, r) for a, r in zip(v, (1, 7, 12, 18))) & _U64
+        for a in v:
+            h = ((h ^ _xxh_round(0, a)) * _XXH_P1 + _XXH_P4) & _U64
+    else:
+        h = (seed + _XXH_P5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _XXH_P1 + _XXH_P4) & _U64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _XXH_P1 & _U64
+        h = (_rotl(h, 23) * _XXH_P2 + _XXH_P3) & _U64
+        i += 4
+    for byte in data[i:]:
+        h ^= byte * _XXH_P5 & _U64
+        h = _rotl(h, 11) * _XXH_P1 & _U64
+    h = (h ^ (h >> 33)) * _XXH_P2 & _U64
+    h = (h ^ (h >> 29)) * _XXH_P3 & _U64
+    return h ^ (h >> 32)
+
+
+def _bucket_of_value(value, data_type: T.DataType, n_buckets: int) -> int | None:
+    """``_bucket_expr`` evaluated in Python for one key value: Spark hashes a
+    string as its UTF-8 bytes, an int as 4 and a long as 8 little-endian
+    bytes, and a NULL as the bare seed. Returns None where that does not
+    apply, so the caller asks Spark instead: any other column type
+    (collated strings included), or a value of another Python type (a
+    ``bool``; an ``int`` for a string key, which Spark stores as its text)
+    or out of the column's range. Guarded against the writer's expression
+    by ``tests/test_bucket_hash.py``."""
+    width = _INT_WIDTH.get(data_type)
+    is_str = data_type == T.StringType()
+    try:
+        if value is None and (width or is_str):
+            h = _XXH_SEED
+        elif is_str and type(value) is str:
+            h = _xxh64(value.encode("utf-8"))
+        elif width and type(value) is int:
+            h = _xxh64(value.to_bytes(width, "little", signed=True))
+        else:
+            return None
+    except (UnicodeEncodeError, OverflowError):  # lone surrogate, out of range
+        return None
+    # Spark's hash is a signed long; Python's % on it then equals pmod
+    return (h - (1 << 64) if h >= 1 << 63 else h) % n_buckets
 
 
 def compute_bucket_stats(
@@ -3228,8 +3306,11 @@ class SnapshotTable(LakeTable):
         delete is NOT erasure here (it writes a tombstone that itself
         carries the key, and MoR deltas keep superseded versions).
 
-        The key's bucket is computed driver-side (the same hash
-        ``lookup`` uses), so the rewrite reads and rewrites exactly
+        The key's bucket comes from :meth:`_bucket_of`, as for
+        ``lookup``: the writer's hash evaluated in Python with no Spark job
+        for string, int and long keys, a one-row Spark probe for other key
+        types (``tests/test_bucket_hash.py`` guards both). The rewrite
+        then reads and rewrites exactly
         1/n_buckets of the table — at 100 TB with 4096 buckets, one
         conversation's erasure touches a few files, never the table. The
         MoR rewrite collapses the bucket bucket-locally (no Exchange),
@@ -4725,8 +4806,11 @@ class SnapshotTable(LakeTable):
         pruning: a point lookup of one wide conversation can skip the
         payload columns it does not need.
 
-        The writer's bucket function (``xxhash64(key[0]) % n_buckets``) is
-        evaluated driver-side on the probe value, so the scan opens only
+        The writer's bucket function (``pmod(xxhash64(key[0]), n_buckets)``)
+        is evaluated on the driver by :meth:`_bucket_of`: in Python with no
+        Spark job for string, int and long keys, by a one-row Spark probe
+        for other key types, both held to the writer's expression by
+        ``tests/test_bucket_hash.py``. So the scan opens only
         that bucket's files — 1/n_buckets of the table, the Iceberg
         bucket-transform partition-pruning analog for point queries; at
         100 TB with 4096 buckets a conversation lookup reads a few files
@@ -4784,15 +4868,22 @@ class SnapshotTable(LakeTable):
         return key
 
     def _bucket_of(self, value) -> int:
-        """The bucket that holds ``value`` of the leading key column —
-        evaluated through the SAME Spark expression the writer uses
-        (``_bucket_expr``), via a one-row probe, so every bucket-local
-        operation (lookup, purge_key) and the write path can never
-        disagree on the hash."""
+        """The bucket that holds ``value`` of the leading key column.
+
+        For string, int and long keys the writer's hash (``_bucket_expr``:
+        ``pmod(xxhash64(key), n_buckets)``) is evaluated on the driver by
+        :func:`_bucket_of_value` and no Spark job runs. Any other key type,
+        or a value that does not match the column type, takes a one-row
+        Spark probe through ``_bucket_expr`` itself, so such a value buckets
+        (or raises) exactly as the writer would. ``tests/test_bucket_hash.py``
+        checks both paths against the writer's expression."""
         bcol = list(self.key)[0]
+        dtype = self.schema[bcol].dataType
+        b = _bucket_of_value(value, dtype, self.n_buckets)
+        if b is not None:
+            return b
         probe = self.spark.createDataFrame(
-            [(value,)],
-            T.StructType([T.StructField(bcol, self.schema[bcol].dataType)]),
+            [(value,)], T.StructType([T.StructField(bcol, dtype)])
         )
         return int(
             probe.select(_bucket_expr(bcol, self.n_buckets).alias("b")).first()["b"]

@@ -42,8 +42,10 @@ BUDGET = {
     ("constraint_metrics.collect", "cow"): 0,
     ("compact_lineage", "mor"): 0,
     ("compact_lineage", "cow"): 0,
-    ("lookup.collect", "mor"): 4,
-    ("lookup.collect", "cow"): 4,
+    ("bucket_of", "mor"): 0,
+    ("bucket_of", "cow"): 0,
+    ("lookup.collect", "mor"): 1,
+    ("lookup.collect", "cow"): 1,
     ("read.count", "mor"): 2,
     ("read.count", "cow"): 2,
     ("read_changes.count", "mor"): 2,
@@ -58,6 +60,8 @@ BUDGET = {
     ("compact", "mor"): 1,
     ("vacuum", "mor"): 0,
     ("vacuum", "cow"): 0,
+    ("purge_key", "mor"): 3,
+    ("purge_key", "cow"): 3,
 }
 
 
@@ -93,6 +97,7 @@ def test_job_budget(spark, tmpdir_path, mode):
         "epoch_summary.collect": lambda: epoch_summary(tbl).collect(),
         "lineage.collect": lambda: tbl.lineage().collect(),
         "constraint_metrics.collect": lambda: tbl.constraint_metrics().collect(),
+        "bucket_of": lambda: tbl._bucket_of("c1"),
         "lookup.collect": lambda: tbl.lookup("c1").collect(),
         "read.count": lambda: tbl.read().count(),
         "read_changes.count": lambda: tbl.read_changes(0).count(),
@@ -103,6 +108,7 @@ def test_job_budget(spark, tmpdir_path, mode):
         "compact_lineage": lambda: tbl.compact_lineage(),
         "compact": lambda: tbl.compact(max_files=1),
         "vacuum": lambda: tbl.vacuum(),
+        "purge_key": lambda: tbl.purge_key("c1"),
     }
     seen = {
         op: jobs_of(fn) for op, fn in ops.items() if (op, mode) in BUDGET
