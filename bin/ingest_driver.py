@@ -67,8 +67,6 @@ def main(argv: list[str] | None = None) -> int:
                         "PATH after the run: incremental refresh off the "
                         "changes feed (MoR tables) or full rebuild (CoW)")
     p.add_argument("--files-per-epoch", type=int, default=4)
-    p.add_argument("--hot-key-threshold", type=int, default=None,
-                   help="force the salted two-phase collapse when a conversation exceeds this event count (default: plain collapse — map-side partial agg absorbs skew)")
     p.add_argument("--normalize", action="store_true", help="NFC/whitespace text normalization")
     p.add_argument("--max-files-per-trigger", type=int, default=4)
     p.add_argument("--source-format", choices=("parquet", "debezium-json"),
@@ -505,7 +503,6 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
                 available_now=not args.stream,
                 normalize=args.normalize,
-                hot_key_threshold=args.hot_key_threshold,
             )
         else:
             q = run_stream(
@@ -516,7 +513,6 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
                 available_now=not args.stream,
                 normalize=args.normalize,
-                hot_key_threshold=args.hot_key_threshold,
                 # CoW tables fall back to the post-run rebuild below
                 rollup_path=args.rollup_path if table.mode == "mor" else None,
                 derived_tables=(
@@ -536,7 +532,6 @@ def main(argv: list[str] | None = None) -> int:
             table,
             files_per_epoch=args.files_per_epoch,
             normalize=args.normalize,
-            hot_key_threshold=args.hot_key_threshold,
         )
         for st in stats:
             print(

@@ -581,10 +581,8 @@ def compute_bucket_stats(
     df: DataFrame, bucket_col: str, n_buckets: int, lsn_col: str = "lsn"
 ) -> list:
     """Per-bucket (n_in, max_lsn) over a raw change batch — ONE column-pruned
-    map-side-combined scan. Shared by the copy-on-write MERGE's bucket
-    pruning / lineage watermark AND the pipeline's hot-bucket gate (a bucket under the hot-key
-    threshold cannot contain a hot key), so hot-key detection costs no extra
-    scan in the common cold case."""
+    map-side-combined scan, feeding the copy-on-write MERGE's bucket pruning
+    and lineage watermark."""
     lsn = F.col(lsn_col) if lsn_col in df.columns else F.lit(None).cast("long")
     return (
         df.withColumn("_bucket", _bucket_expr(bucket_col, n_buckets))
@@ -3247,11 +3245,7 @@ class SnapshotTable(LakeTable):
             os.path.join(self.path, f) for fs in qmap.values() for f in fs
         ]
         qdf = self.spark.read.option("mergeSchema", "true").parquet(*all_paths)
-        pred = None
-        for col, val in zip(key_cols, key_values):
-            term = F.col(col) == F.lit(val)
-            pred = term if pred is None else pred & term
-        hit = F.coalesce(pred, F.lit(False))
+        hit = F.coalesce(self._key_match(key_cols, key_values), F.lit(False))
         per_epoch = (
             qdf.groupBy("_epoch_key")
             .agg(
@@ -3355,15 +3349,11 @@ class SnapshotTable(LakeTable):
             rows = self._read_collapsed_local(buckets=[b])
         else:
             rows = self._read_raw(buckets=[b])
-        pred = None
-        for col, val in zip(key, key_values):
-            term = F.col(col) == F.lit(val)
-            pred = term if pred is None else pred & term
         # tombstones for the key carry NULL payload but real key cols, so
         # the same predicate matches them; NULL-keyed rows (never produced
         # by the engine, but cheap to be safe about) are KEPT, not dropped
         # by three-valued logic
-        hit = F.coalesce(pred, F.lit(False))
+        hit = F.coalesce(self._key_match(key, key_values), F.lit(False))
         n_purge = rows.filter(hit).count()
         if n_purge == 0:
             if n_quarantine and expire_history:
@@ -4854,10 +4844,9 @@ class SnapshotTable(LakeTable):
                 }
                 src = object.__new__(SnapshotTable)
                 src.spark, src.path, src._snapshot = self.spark, self.path, snap
-        df = src.read(buckets=[b], columns=columns)
-        for col, val in zip(key, key_values):
-            df = df.filter(F.col(col) == F.lit(val))
-        return df
+        return src.read(buckets=[b], columns=columns).filter(
+            self._key_match(key, key_values)
+        )
 
     def _validate_key_prefix(self, op: str, key_values: tuple) -> list[str]:
         key = list(self.key)
@@ -4866,6 +4855,19 @@ class SnapshotTable(LakeTable):
                 f"{op} takes 1..{len(key)} values for key {tuple(key)}"
             )
         return key
+
+    def _key_match(self, key: list[str], key_values: tuple):
+        """``key[i] = key_values[i]`` over the given key prefix, each literal
+        cast to its key column's type. A value of another Python type then
+        compares in the form the writer stored (``7`` on a string key as
+        ``'7'``, ``True`` as ``'true'``) instead of making Spark cast the
+        whole column, which under ANSI mode raises on every other key in
+        the bucket. A value the column type cannot hold still raises."""
+        pred = None
+        for col, val in zip(key, key_values):
+            term = F.col(col) == F.lit(val).cast(self.schema[col].dataType)
+            pred = term if pred is None else pred & term
+        return pred
 
     def _bucket_of(self, value) -> int:
         """The bucket that holds ``value`` of the leading key column.

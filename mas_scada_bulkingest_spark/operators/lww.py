@@ -14,9 +14,11 @@ Two implementations:
     a *partially aggregatable* hash aggregate: Spark computes map-side partial
     maxes before the shuffle, so a hot conversation's million change events
     collapse to one row per map task before a single byte shuffles. This beats
-    any window/sort formulation at scale and is naturally skew-resistant. An
-    optional explicit two-phase salted mode adds a salt stage for pathological
-    single-key skew (north_rule's "salted key-partitioned shuffle").
+    any window/sort formulation at scale and is the engine's skew mechanism:
+    every reducer sees at most #map-tasks rows per key, however hot the key
+    (an explicit salted two-phase reduce on top added jobs and never won a
+    majority of skewed A/B pairs inside the merge, BENCH.md §"Skew-path
+    calibration").
 
 ``collapse_lww_window``  (parity/verification path)
     The textbook ``row_number() OVER (PARTITION BY keys ORDER BY ts DESC,
@@ -36,19 +38,12 @@ def collapse_lww(
     df: DataFrame,
     keys: Sequence[str] = ("conv_id", "turn_idx"),
     order: Sequence[str] = ("ts", "lsn"),
-    two_phase_salt: int | None = None,
     track_max_of: str | None = None,
 ) -> DataFrame:
     """Collapse to one row per ``keys`` — the row with max ``order`` tuple.
 
     All non-key columns are carried on the winning row. Exact duplicate
     deliveries (same ``order`` tuple) are identical rows, so ties are safe.
-
-    ``two_phase_salt=N`` forces an explicit salted pre-aggregation: events are
-    first combined within ``(keys, xxhash64(order)%N)`` groups, then the N
-    partial winners are reduced per key. Use when a single key dominates an
-    epoch so heavily that even map-side partial aggregation leaves one reducer
-    hot (north_rule skew-splitting requirement).
 
     ``track_max_of="lsn"`` adds a ``_max_lsn`` column: the max lsn *seen* per
     key (not just the winner's) — rides the same aggregate, costs no extra
@@ -60,21 +55,10 @@ def collapse_lww(
     packed = F.struct(*[F.col(c) for c in order + carried])
 
     extra_name = f"_max_{track_max_of}" if track_max_of else None
-    if two_phase_salt:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(two_phase_salt))
-        aggs = [F.max(packed).alias("_w")]
-        if track_max_of:
-            aggs.append(F.max(F.col(track_max_of)).alias(extra_name))
-        partial = df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*aggs)
-        aggs2 = [F.max("_w").alias("_w")]
-        if track_max_of:
-            aggs2.append(F.max(F.col(extra_name)).alias(extra_name))
-        winner = partial.groupBy(*keys).agg(*aggs2)
-    else:
-        aggs = [F.max(packed).alias("_w")]
-        if track_max_of:
-            aggs.append(F.max(F.col(track_max_of)).alias(extra_name))
-        winner = df.groupBy(*keys).agg(*aggs)
+    aggs = [F.max(packed).alias("_w")]
+    if track_max_of:
+        aggs.append(F.max(F.col(track_max_of)).alias(extra_name))
+    winner = df.groupBy(*keys).agg(*aggs)
 
     out_cols = list(df.columns) + ([extra_name] if track_max_of else [])
     return winner.select(

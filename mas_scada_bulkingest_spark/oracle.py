@@ -4,7 +4,7 @@ Implements the engine's contract in the most obvious possible way (pandas,
 one process): group the change log by ``(conv_id, turn_idx)``, keep the
 mutation with the lexicographically largest ``(ts, lsn)``, and drop the key
 if that winning mutation is a delete. The engine (distributed, epoch-batched,
-skew-salted, exactly-once MERGE) must produce an identical final table.
+partially aggregated, exactly-once MERGE) must produce an identical final table.
 
 This mirrors the verification idea in SURVEY.md §5(b): per-turn text equality
 under stable ``(conv_id, turn_idx)`` ordering (BASELINE.json ``input_hint``).

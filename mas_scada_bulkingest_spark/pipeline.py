@@ -20,7 +20,6 @@ from .lake.base import LakeTable
 from .lake.snapshot_table import MergeStats, SnapshotTable, compute_bucket_stats
 from .operators.classify import classify_expr
 from .operators.lww import collapse_lww
-from .operators.skew import hot_keys
 from .schemas import (
     CONVERSATIONS_SCHEMA,
     REGISTRY_KEY,
@@ -64,9 +63,6 @@ def apply_changes(
     batch: DataFrame,
     epoch_id: int | str,
     normalize: bool = False,
-    skew_salt: int | None = None,
-    hot_key_threshold: int | None = None,
-    skew_strategy: str | None = None,
     auto_compact_files: int | None = None,
     auto_cluster_files: int | None = None,
     registry: LakeTable | None = None,
@@ -74,24 +70,14 @@ def apply_changes(
 ) -> MergeStats:
     """Apply one micro-batch of change records to ``table`` exactly once.
 
-    Skew handling (north_rule's explicit skew splitting for hot
-    conversations): the DEFAULT collapse is the max-struct aggregate, whose
-    map-side partial aggregation is itself the skew mechanism — a hot
-    conversation's million events collapse to ONE row per map task before a
-    single byte shuffles, so each reducer sees at most #map-tasks rows per
-    key regardless of hotness. An explicit two-phase salted reduce on top of
-    an algebraic aggregate only adds a third full exchange (measured: +1
-    shuffle + 1 SortAggregate pass per epoch for zero reducer relief); it
-    matters for NON-algebraic per-key work — window/sort formulations,
-    stateful pandas ops — which is what ``operators/skew.py`` and
-    ``collapse_lww(two_phase_salt=…)`` remain for.
+    Skew (north_rule's skew splitting for hot conversations) needs no
+    switch: the collapse is the max-struct aggregate, whose map-side partial
+    aggregation collapses a hot conversation's events to ONE row per map
+    task before a single byte shuffles, so each reducer sees at most
+    #map-tasks rows per key however hot the key is. A salted two-phase
+    reduce on top added an exchange and jobs and never won a majority of
+    skewed A/B pairs (BENCH.md §"Skew-path calibration").
 
-    ``skew_strategy``: ``"plain"`` (default) uses the single-aggregate
-    collapse; ``"salted"`` detects hot conversations (>``hot_key_threshold``
-    events, sampled scan, gated by a per-bucket count) and forces the
-    explicit two-phase salted collapse when one is found. Passing
-    ``hot_key_threshold`` without a strategy implies ``"salted"``
-    (back-compat). ``skew_salt=N`` always forces two-phase with N salts.
     ``auto_compact_files=K`` (merge-on-read tables) compacts any bucket that
     exceeds K delta files after the commit; ``auto_cluster_files=k`` makes
     that maintenance rewrite CLUSTERED (range-sliced on event time, see
@@ -109,40 +95,20 @@ def apply_changes(
     if table.is_epoch_committed(epoch_id):
         return table.merge_changes(batch.limit(0), epoch_id)  # cheap no-op path
 
-    strategy = skew_strategy or ("salted" if hot_key_threshold is not None else "plain")
     parsed = parse_changes(batch, normalize=normalize)
     if registry is not None:
         register_conversations(registry, parsed, epoch_id)
-    bucket_col = table.key[0]
-    track = "lsn" if "lsn" in parsed.columns else None
-    mor = getattr(table, "mode", None) == "mor"
-
-    two_phase = skew_salt
     pre = None
-    if strategy == "salted" or not mor:
-        # ONE shared pre-pass over the raw batch: per-bucket counts + max
-        # LSN. CoW needs it regardless (bucket pruning: which existing files
-        # to read and rewrite); the salted strategy reuses it as the hot-key
-        # gate — a conversation can only be hot if its whole BUCKET exceeds
-        # the threshold, so the per-conversation detection scan runs only
-        # when some bucket count crosses it. Merge-on-read with the plain
-        # strategy skips the pre-pass entirely: merge_changes ignores
-        # pre_stats under MoR and takes its per-bucket stats from the delta
-        # files its write produced.
-        pre = compute_bucket_stats(parsed, bucket_col, table.n_buckets)
-    if strategy == "salted" and two_phase is None:
-        threshold = hot_key_threshold or 100_000
-        some_bucket_hot = any(r["n_in"] > threshold for r in pre)
-        if some_bucket_hot and hot_keys(
-            parsed, keys=(bucket_col,), min_count=threshold
-        ):
-            two_phase = 16
+    if getattr(table, "mode", None) != "mor":
+        # copy-on-write bucket pruning: which existing files to read and
+        # rewrite. Merge-on-read skips this pass: merge_changes takes its
+        # per-bucket stats from the delta files its write produced.
+        pre = compute_bucket_stats(parsed, table.key[0], table.n_buckets)
     collapsed = collapse_lww(
         parsed,
         keys=table.key,
         order=table.order,
-        two_phase_salt=two_phase,
-        track_max_of=track,
+        track_max_of="lsn" if "lsn" in parsed.columns else None,
     )
     return table.merge_changes(
         collapsed,

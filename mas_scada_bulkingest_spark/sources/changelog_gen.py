@@ -5,7 +5,7 @@ stream of ``insert|update|delete`` mutations against ``(conv_id, turn_idx)``
 keys, with
 
 * **Zipf-skewed conversation popularity** — hot conversations, so skew
-  handling (salting / AQE) is actually exercised (the reference serializes
+  handling (map-side partial aggregation / AQE) is actually exercised (the reference serializes
   uploads and has no skew story at all, DBConnector.java:219-332);
 * **out-of-order event time** — ``ts`` jitters around the lsn order, so
   last-writer-wins must be decided on ``(ts, lsn)`` not arrival order;

@@ -136,6 +136,32 @@ def test_fallback_on_a_string_key_buckets_as_the_writer(spark, tmpdir_path):
         ), value
 
 
+def test_lookup_and_purge_key_compare_in_the_stored_text_form(spark, tmpdir_path):
+    """A non-``str`` value on a string key matches the text the writer
+    stored, and other keys sharing the bucket do not make the filter cast
+    the column (which raises under ANSI mode)."""
+    cols = (
+        "lsn long, op string, conv_id string, turn_idx int, role string,"
+        " text string, tool string, ts timestamp_ntz"
+    )
+    tbl = create_transcripts_table(spark, tmpdir_path + "/t", n_buckets=1, mode="mor")
+    t = datetime(2024, 1, 1)
+    apply_changes(
+        tbl,
+        spark.createDataFrame(
+            [(i, "insert", k, 0, "u", k, None, t) for i, k in enumerate(["7", "c1", "true"])],
+            cols,
+        ),
+        0,
+    )
+    rows = lambda *key: sorted(map(tuple, tbl.lookup(*key).collect()))
+    assert rows(7) == rows("7") and [r[0] for r in rows(7)] == ["7"]
+    assert rows(7, 0) == rows("7")
+    assert [r[0] for r in rows(True)] == ["true"]
+    assert tbl.purge_key(7) == 1
+    assert sorted(r["conv_id"] for r in tbl.read().collect()) == ["c1", "true"]
+
+
 @pytest.mark.parametrize("dtype", [T.IntegerType(), T.LongType()])
 def test_fallback_raises_as_the_probe_did(spark, tmpdir_path, dtype):
     """A value an int or long key column does not take still goes to Spark,

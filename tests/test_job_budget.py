@@ -19,7 +19,7 @@ from datetime import datetime
 
 import pytest
 
-from mas_scada_bulkingest_spark.pipeline import create_transcripts_table
+from mas_scada_bulkingest_spark.pipeline import apply_changes, create_transcripts_table
 from mas_scada_bulkingest_spark.status import epoch_summary, status
 
 DDL = (
@@ -28,10 +28,14 @@ DDL = (
 )
 
 #: (operation, mode) -> max Spark jobs. "merge" is a non-compacting
-#: ``merge_changes`` into a table that already holds every touched bucket.
+#: ``merge_changes`` into a table that already holds every touched bucket;
+#: "apply_changes" is the whole epoch on top of it (parse, LWW collapse,
+#: and the copy-on-write bucket-stats pass).
 BUDGET = {
     ("merge", "mor"): 2,
     ("merge", "cow"): 6,
+    ("apply_changes", "mor"): 3,
+    ("apply_changes", "cow"): 6,
     ("status", "mor"): 0,
     ("status", "cow"): 0,
     ("epoch_summary.collect", "mor"): 0,
@@ -93,6 +97,7 @@ def test_job_budget(spark, tmpdir_path, mode):
     tbl.merge_changes(batch(1), 1)
     ops = {
         "merge": lambda: tbl.merge_changes(batch(2), 2),
+        "apply_changes": lambda: apply_changes(tbl, batch(3), 3),
         "status": lambda: status(tbl),
         "epoch_summary.collect": lambda: epoch_summary(tbl).collect(),
         "lineage.collect": lambda: tbl.lineage().collect(),

@@ -156,14 +156,3 @@ def test_schema_evolution_mid_replay(spark, tmpdir_path):
     assert_frames_equal(got, ref[FINAL_COLS])
     assert got["metadata"].isna().sum() > 0  # pre-evolution winners read NULL
     assert got["metadata"].notna().sum() > 0
-
-
-def test_skew_salted_path_matches(spark, tmpdir_path):
-    generate_changelog(tmpdir_path + "/log", n_convs=25, mean_turns=5, seed=25)
-    ref = oracle.reduce_changelog_dir(tmpdir_path + "/log")
-    tbl = create_transcripts_table(spark, tmpdir_path + "/t", n_buckets=4)
-    replay_batches(
-        spark, tmpdir_path + "/log", tbl, files_per_epoch=2,
-        skew_salt=8, hot_key_threshold=10,
-    )
-    assert_frames_equal(_final(tbl), ref[FINAL_COLS])

@@ -79,9 +79,7 @@ def _recompute(spark, path: str, epoch: int) -> list[tuple]:
     return [(r["_bucket"], r["n"] - r["d"], 0, r["d"], r["l"]) for r in rows]
 
 
-@pytest.mark.parametrize(
-    "case", ["all_delete", "no_lsn", "all_dropped", "staged", "salted"]
-)
+@pytest.mark.parametrize("case", ["all_delete", "no_lsn", "all_dropped", "staged"])
 def test_mor_lineage_equals_delta_recompute(spark, tmpdir_path, case):
     tbl = SnapshotTable.create(
         spark,
@@ -102,8 +100,6 @@ def test_mor_lineage_equals_delta_recompute(spark, tmpdir_path, case):
         batch = batch.filter(F.col("op") == "update")
     elif case == "staged":
         kwargs["stage"] = True
-    elif case == "salted":
-        kwargs.update(skew_strategy="salted", hot_key_threshold=1)
     st = apply_changes(tbl, batch, 1, **kwargs)
 
     expected = _recompute(spark, tbl.path, 1)
@@ -138,7 +134,6 @@ def test_mor_lineage_equals_delta_recompute(spark, tmpdir_path, case):
             staged = json.load(f)
         assert staged["staged_counts"] == [st.applied, 0, st.deleted]
         assert staged["staged_max_lsn"] == st.max_lsn
-    if case in ("staged", "salted"):
         # max LSN SEEN, incl. the collapsed stale losers (lsn 400+)
         assert (st.applied + st.deleted, st.max_lsn) == (N_KEYS, 400 + N_KEYS - 1)
 

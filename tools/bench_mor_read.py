@@ -62,7 +62,7 @@ def main() -> None:
     )
     # 4 epochs -> real cross-epoch delta overlap; compaction off so the read
     # resolves multi-file buckets (the worst honest case for the read path)
-    replay_batches(spark, changes, table, files_per_epoch=8, hot_key_threshold=500_000)
+    replay_batches(spark, changes, table, files_per_epoch=8)
     n_files = sum(len(v) for v in table._snapshot["buckets"].values())
 
     def read_global():
