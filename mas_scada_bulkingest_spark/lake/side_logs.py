@@ -99,15 +99,21 @@ def lineage_epoch_keys(lin: pa.Table) -> pa.ChunkedArray:
     return pc.coalesce(lin["epoch_key"], pc.cast(lin["epoch_id"], pa.string()))
 
 
-def _newest_per(tbl: pa.Table, keys: dict[str, pa.ChunkedArray]) -> pa.Table:
-    """One row of ``tbl`` per distinct ``keys`` tuple: the one with the
-    newest ``committed_ts`` (nulls lose). Returned sorted by the keys."""
-    order = pc.sort_indices(tbl, [("committed_ts", "descending")])
+def newest_per(
+    tbl: pa.Table, keys: dict[str, pa.ChunkedArray], by: list[str]
+) -> pa.Table:
+    """One row of ``tbl`` per distinct ``keys`` tuple: the one whose
+    ``by`` columns are greatest, compared left to right with NULL below
+    every value (Spark's struct ordering, so also ``collapse_lww``'s winner
+    for types the two order alike). Returned sorted by the keys."""
+    order = pc.sort_indices(
+        tbl, [(c, "descending") for c in by], null_placement="at_end"
+    )
     keyed = pa.table({k: v.take(order) for k, v in keys.items()}).append_column(
         "__row", order
     )
     # hash "first" follows input order only single-threaded; the input is
-    # newest-first, so "first" is the newest row of each group
+    # greatest-first, so "first" is the winning row of each group
     first = keyed.group_by(list(keys), use_threads=False).aggregate(
         [("__row", "first")]
     )
@@ -118,15 +124,17 @@ def _newest_per(tbl: pa.Table, keys: dict[str, pa.ChunkedArray]) -> pa.Table:
 def read_lineage(table_path: str) -> pa.Table:
     """Deduplicated lineage rows under :data:`LINEAGE_ARROW_SCHEMA`."""
     lin = _read_log(table_path, LINEAGE_LOG)
-    return _newest_per(
-        lin, {"k": lineage_epoch_keys(lin), "p": lin["partition_id"]}
+    return newest_per(
+        lin, {"k": lineage_epoch_keys(lin), "p": lin["partition_id"]}, ["committed_ts"]
     )
 
 
 def read_constraint_metrics(table_path: str) -> pa.Table:
     """Deduplicated constraint-metrics rows under :data:`METRICS_ARROW_SCHEMA`."""
     m = _read_log(table_path, METRICS_LOG)
-    return _newest_per(m, {"k": m["epoch_key"], "c": m["constraint_name"]})
+    return newest_per(
+        m, {"k": m["epoch_key"], "c": m["constraint_name"]}, ["committed_ts"]
+    )
 
 
 def write_log(table_path: str, log: SideLog, tag, data) -> None:

@@ -53,13 +53,16 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from datetime import datetime
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.lww import collapse_lww
 from ..operators.schema_evolution import align_schemas, merge_schemas
@@ -75,6 +78,7 @@ from .side_logs import (
     METRICS_LOG,
     compact_log,
     lineage_epoch_keys,
+    newest_per,
     read_constraint_metrics,
     read_lineage,
     write_log,
@@ -672,6 +676,47 @@ def _file_order_stats(abs_path: str, col: str) -> list | None:
 #: ~1.6 %; the hex encoding costs <=4 KB of snapshot JSON per digested file.
 _DIGEST_CAP = 1024
 _DIGEST_SPACE = 1 << 16
+
+#: A merge-on-read ``lookup`` resolves its key on the driver only when the
+#: bucket's digest-kept files total at most this many bytes (the snapshot's
+#: ``file_sizes``); a larger slice goes through the Spark read.
+_LOOKUP_DRIVER_MAX_BYTES = 64 << 20
+
+#: Column types that pyarrow's sort and hash grouping order and compare as
+#: Spark's struct ordering and grouping do (NaN aside, checked per read):
+#: strings as unsigned UTF-8 bytes, numbers and NTZ timestamps by value,
+#: false below true. A collated string is not ``StringType()``.
+_DRIVER_LOOKUP_TYPES = frozenset(
+    {
+        T.StringType(), T.BooleanType(), T.IntegerType(), T.LongType(),
+        T.FloatType(), T.DoubleType(), T.TimestampNTZType(),
+    }
+)
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    return T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields])
+
+
+def _is_column_value(value, data_type: T.DataType) -> bool:
+    """True when ``value`` is a key value of the column's own kind: a ``str``
+    with a UTF-8 form for an uncollated string, an ``int`` in range for an
+    integral type. Anything else (``7`` or ``True`` on a string key, which
+    Spark compares as the text it stores) is left to Spark."""
+    if data_type == T.StringType():
+        if type(value) is not str:
+            return False
+        try:
+            value.encode("utf-8")
+        except UnicodeEncodeError:  # lone surrogate
+            return False
+        return True
+    width = _INT_WIDTH.get(data_type)
+    return (
+        width is not None
+        and type(value) is int
+        and -(1 << 8 * width - 1) <= value < 1 << 8 * width - 1
+    )
 
 
 def _digest_hash(v) -> int | None:
@@ -1336,6 +1381,29 @@ class SnapshotTable(LakeTable):
             extra.append(T.StructField(_PATCHED, T.LongType()))
         return T.StructType(fields + extra)
 
+    def _alias_schema(
+        self, pinned: T.StructType
+    ) -> tuple[dict[str, list[str]], T.StructType]:
+        """The ``rename_column`` aliases of ``pinned``'s columns (current
+        name -> former names, oldest first) and the read schema widened
+        with those former names, each typed as its current column."""
+        names = {f.name for f in pinned.fields}
+        aliases = {
+            n: olds
+            for n, olds in self._snapshot.get("column_aliases", {}).items()
+            if olds and n in names
+        }
+        by_name = {f.name: f for f in pinned.fields}
+        wide = T.StructType(
+            list(pinned.fields)
+            + [
+                T.StructField(o, by_name[new].dataType)
+                for new, olds in aliases.items()
+                for o in olds
+            ]
+        )
+        return aliases, wide
+
     def _alias_read(self, files: list[str], pinned: T.StructType) -> DataFrame:
         """Schema-pinned parquet read that resolves ``rename_column``
         aliases. The read schema is widened with each current column's
@@ -1347,20 +1415,9 @@ class SnapshotTable(LakeTable):
         from this engine), so the coalesce is a disjoint fill, not a
         precedence gamble. With no aliases registered this is exactly the
         plain pinned read every caller used before."""
-        aliases = self._snapshot.get("column_aliases", {})
-        names = {f.name for f in pinned.fields}
-        aliases = {n: olds for n, olds in aliases.items() if olds and n in names}
+        aliases, wide = self._alias_schema(pinned)
         if not aliases:
             return self.spark.read.schema(pinned).parquet(*files)
-        by_name = {f.name: f for f in pinned.fields}
-        wide = T.StructType(
-            list(pinned.fields)
-            + [
-                T.StructField(o, by_name[new].dataType)
-                for new, olds in aliases.items()
-                for o in olds
-            ]
-        )
         df = self.spark.read.schema(wide).parquet(*files)
         return df.select(
             *[
@@ -1720,18 +1777,7 @@ class SnapshotTable(LakeTable):
                 max_event_time=max_event_time,
                 columns=columns,
             )
-        project = None
-        out_schema = self.schema
-        if columns is not None:
-            known = {f.name for f in self.schema.fields}
-            bad = sorted(set(columns) - known)
-            if bad:
-                raise ValueError(f"read(columns=…): unknown column(s) {bad}")
-            keep = set(columns) | set(self.key)
-            project = keep | set(self.order)
-            out_schema = T.StructType(
-                [f for f in self.schema.fields if f.name in keep]
-            )
+        project, out_schema = self._projection(columns)
         lo, lo_enc = self._norm_bound(min_event_time)
         hi, hi_enc = self._norm_bound(max_event_time)
         if self.mode == "mor":
@@ -1754,6 +1800,23 @@ class SnapshotTable(LakeTable):
         if hi is not None:
             df = df.filter(F.col(o0) <= self._bound_lit(hi))
         return align_schemas(df, out_schema)
+
+    def _projection(
+        self, columns: list[str] | None
+    ) -> tuple[set | None, T.StructType]:
+        """``read(columns=…)``'s (scan projection, output schema): the scan
+        keeps key, order and requested columns, the output key and
+        requested ones in table order. Unknown names raise."""
+        if columns is None:
+            return None, self.schema
+        known = {f.name for f in self.schema.fields}
+        bad = sorted(set(columns) - known)
+        if bad:
+            raise ValueError(f"read(columns=…): unknown column(s) {bad}")
+        keep = set(columns) | set(self.key)
+        return keep | set(self.order), T.StructType(
+            [f for f in self.schema.fields if f.name in keep]
+        )
 
     def at_version(self, version: int) -> "SnapshotTable":
         """A read-only handle pinned to snapshot ``version`` (time travel).
@@ -4804,9 +4867,7 @@ class SnapshotTable(LakeTable):
         that bucket's files — 1/n_buckets of the table, the Iceberg
         bucket-transform partition-pruning analog for point queries; at
         100 TB with 4096 buckets a conversation lookup reads a few files
-        instead of the table. Remaining ``key_values`` become residual
-        equality predicates after the bucket-local LWW collapse (row-group
-        pruning applies too: bootstrap/compaction write key-sorted files).
+        instead of the table.
 
         ``key_values`` follow ``self.key`` order — ``lookup("conv-7")`` or
         ``lookup("conv-7", 3)``.
@@ -4816,19 +4877,43 @@ class SnapshotTable(LakeTable):
         merge-on-read a conversation's lookup opens the bucket's base file
         plus only the epoch deltas that actually mutated that conversation.
         Soundness: dropping a file with zero rows of key K cannot change
-        K's LWW winner, and rows of other keys are removed by the residual
-        equality filter either way. Skipped files count into
+        K's LWW winner, and rows of other keys are removed by the key
+        equality either way. Skipped files count into
         ``last_read_pruned_files``.
+
+        On a merge-on-read table the kept files are then resolved on the
+        driver (:meth:`_lookup_on_driver`): a pyarrow read under the pinned
+        storage schema with the key equality pushed into row-group
+        statistics (bootstrap and compaction write key-sorted files), and
+        ``read()``'s last-writer-wins rule applied in Arrow. The result is
+        ``createDataFrame`` over the Arrow table, a local relation, so
+        ``lookup(k).collect()`` submits no Spark job. The Spark read below
+        takes over, with the same result, when the driver cannot resolve
+        the request exactly:
+
+        * a key value whose Python type is not the column's (``7`` or
+          ``True`` on a string key compares as the text Spark stored);
+        * a column outside :data:`_DRIVER_LOOKUP_TYPES` — a collated
+          string, a date, a decimal, a nested column — or a key column that
+          is not a string, int or long;
+        * a NaN in a float column of the key's rows (Arrow sorts NaN below
+          numbers, Spark above);
+        * kept files totalling more than :data:`_LOOKUP_DRIVER_MAX_BYTES`
+          (64 MiB) in the snapshot's ``file_sizes``.
+
+        Copy-on-write lookups always take the Spark read of the bucket with
+        the key equality as a residual filter. That read goes through a
+        throwaway handle, so a lookup never replaces this handle's cached
+        full-read plan.
         """
         key = self._validate_key_prefix("lookup", key_values)
         b = self._bucket_of(key_values[0])
-        src: SnapshotTable = self
+        kept = self._snapshot["buckets"].get(str(b), [])
         h = _digest_hash(key_values[0])
         digests = self._snapshot.get("file_key_digests", {})
         if h is not None and digests:
             probe = f"{h:04x}"
-            bfiles = self._snapshot["buckets"].get(str(b), [])
-            kept = []
+            bfiles, kept = kept, []
             for fl in bfiles:
                 d = digests.get(fl)
                 if d is not None and probe not in {
@@ -4837,15 +4922,79 @@ class SnapshotTable(LakeTable):
                     self.last_read_pruned_files += 1
                     continue
                 kept.append(fl)
-            if len(kept) < len(bfiles):
-                snap = {
-                    **self._snapshot,
-                    "buckets": {**self._snapshot["buckets"], str(b): kept},
-                }
-                src = object.__new__(SnapshotTable)
-                src.spark, src.path, src._snapshot = self.spark, self.path, snap
+        files = [os.path.join(self.path, f) for f in kept]
+        if self.mode == "mor":
+            out = self._lookup_on_driver(files, key_values, *self._projection(columns))
+            if out is not None:
+                return out
+        src = object.__new__(SnapshotTable)
+        src.spark, src.path = self.spark, self.path
+        src._snapshot = {
+            **self._snapshot,
+            "buckets": {**self._snapshot["buckets"], str(b): kept},
+        }
         return src.read(buckets=[b], columns=columns).filter(
             self._key_match(key, key_values)
+        )
+
+    def _lookup_on_driver(
+        self,
+        files: list[str],
+        key_values: tuple,
+        project: set | None,
+        out_schema: T.StructType,
+    ) -> DataFrame | None:
+        """:meth:`lookup`'s merge-on-read resolve in Arrow on the driver, or
+        None when the request is not one it resolves exactly (the cases
+        :meth:`lookup` lists). Mirrors :meth:`_collapsed_branch`: NULL
+        ``_tombstone`` reads false and NULL ``_patched`` 0, and the winner
+        per key is the greatest ``order + _tombstone (+ _patched) +
+        carried columns`` tuple with NULL lowest."""
+        # every column nullable, as Spark's parquet scan and read() have it
+        storage = _nullable(self._storage_schema(project))
+        key = list(self.key)
+        dtypes = {f.name: f.dataType for f in storage.fields}
+        if not (
+            all(t in _DRIVER_LOOKUP_TYPES for t in dtypes.values())
+            and all(
+                dtypes[c] == T.StringType() or dtypes[c] in _INT_WIDTH for c in key
+            )
+            and all(_is_column_value(v, dtypes[c]) for c, v in zip(key, key_values))
+            and manifest_file_bytes(
+                self._snapshot.get("file_sizes", {}), self.path, files
+            )
+            <= _LOOKUP_DRIVER_MAX_BYTES
+        ):
+            return None
+        aliases, wide = self._alias_schema(storage)
+        arrow_schema = to_arrow_schema(wide)
+        match = None
+        for c, v in zip(key, key_values):
+            term = ds.field(c) == pa.scalar(v, arrow_schema.field(c).type)
+            match = term if match is None else match & term
+        t = ds.dataset(files, schema=arrow_schema, format="parquet").to_table(
+            filter=match
+        )
+        cols = {c: t[c] for c in dtypes}
+        for new, olds in aliases.items():  # _alias_read's newest-name-first fill
+            cols[new] = pc.coalesce(cols[new], *[t[o] for o in reversed(olds)])
+        if any(
+            pc.any(pc.is_nan(cols[c])).as_py()
+            for c, dt in dtypes.items()
+            if dt in (T.FloatType(), T.DoubleType())
+        ):
+            return None
+        cols[_TOMBSTONE] = pc.fill_null(cols[_TOMBSTONE], False)
+        order = [*self.order, _TOMBSTONE]
+        if _PATCHED in cols:
+            cols[_PATCHED] = pc.fill_null(cols[_PATCHED], 0)
+            order.append(_PATCHED)
+        t = pa.table(cols)
+        carried = [c for c in cols if c not in key and c not in order]
+        t = newest_per(t, {c: t[c] for c in key}, order + carried)
+        t = t.filter(pc.invert(t[_TOMBSTONE]))
+        return self.spark.createDataFrame(
+            t.select(out_schema.fieldNames()), _nullable(out_schema)
         )
 
     def _validate_key_prefix(self, op: str, key_values: tuple) -> list[str]:

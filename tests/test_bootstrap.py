@@ -90,7 +90,7 @@ def test_bootstrap_is_idempotent_and_requires_empty(spark, tmpdir_path):
 
 
 @pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_lookup_scans_exactly_one_bucket(spark, tmpdir_path, mode):
+def test_lookup_scans_exactly_one_bucket(spark, tmpdir_path, mode, monkeypatch):
     from mas_scada_bulkingest_spark.sources import generate_changelog
 
     log = os.path.join(tmpdir_path, "log")
@@ -116,25 +116,36 @@ def test_lookup_scans_exactly_one_bucket(spark, tmpdir_path, mode):
     one = tbl.lookup(probe_conv, t0).toPandas()
     assert len(one) == 1 and one["text"].iloc[0] == want["text"].iloc[0]
 
-    # the point of the API: the read is pruned to exactly ONE bucket
-    # (inputFiles() is empty under the frozen MoR read plan, so spy on the
-    # buckets= argument lookup hands to read() and check that bucket's file
-    # list is a strict subset of the table's)
-    captured = {}
-    orig_read = tbl.read
+    # the point of the API: the read is pruned to exactly ONE bucket. A
+    # merge-on-read lookup resolves on the driver, a copy-on-write one reads
+    # through a throwaway handle (and inputFiles() is empty under the frozen
+    # MoR read plan), so spy on both entry points for the files they open
+    # and check that they lie in one bucket whose file list is a strict
+    # subset of the table's
+    opened: list[str] = []
+    orig_read = SnapshotTable.read
+    orig_driver = SnapshotTable._lookup_on_driver
 
-    def spy(buckets=None, **kw):
-        captured["buckets"] = buckets
-        return orig_read(buckets=buckets, **kw)
+    def read_spy(self, buckets=None, **kw):
+        opened.extend(self._all_files(buckets))
+        return orig_read(self, buckets=buckets, **kw)
 
-    tbl.read = spy
-    try:
-        again = tbl.lookup(probe_conv).orderBy("turn_idx").toPandas()
-    finally:
-        del tbl.read  # restore the bound method
+    def driver_spy(self, files, *args):
+        opened.extend(files)
+        return orig_driver(self, files, *args)
+
+    monkeypatch.setattr(SnapshotTable, "read", read_spy)
+    monkeypatch.setattr(SnapshotTable, "_lookup_on_driver", driver_spy)
+    again = tbl.lookup(probe_conv).orderBy("turn_idx").toPandas()
+    monkeypatch.undo()
     assert_frames_equal(again[want.columns.tolist()], want)
-    assert captured["buckets"] is not None and len(captured["buckets"]) == 1
-    b = str(captured["buckets"][0])
+    bucket_of = {
+        os.path.join(tbl.path, f): b
+        for b, fs in tbl._snapshot["buckets"].items()
+        for f in fs
+    }
+    assert opened and len({bucket_of[f] for f in opened}) == 1
+    b = bucket_of[opened[0]]
     n_bucket_files = len(tbl._snapshot["buckets"][b])
     n_all_files = sum(len(fs) for fs in tbl._snapshot["buckets"].values())
     assert 0 < n_bucket_files < n_all_files

@@ -62,7 +62,13 @@ _strings = st.one_of(
     st.none(),
     st.text(max_size=8),
     st.text(min_size=33, max_size=80),  # past one 32-byte stripe
-    st.text(alphabet=st.characters(min_codepoint=0x80), min_size=1, max_size=40),
+    # no lone surrogates: without a UTF-8 form they are left to the Spark
+    # probe, which test_fallback_on_a_string_key_buckets_as_the_writer checks
+    st.text(
+        alphabet=st.characters(min_codepoint=0x80, exclude_categories=("Cs",)),
+        min_size=1,
+        max_size=40,
+    ),
     st.text(
         alphabet=st.characters(min_codepoint=0x10000, max_codepoint=0x10FFFF),
         min_size=1,

@@ -48,7 +48,7 @@ BUDGET = {
     ("compact_lineage", "cow"): 0,
     ("bucket_of", "mor"): 0,
     ("bucket_of", "cow"): 0,
-    ("lookup.collect", "mor"): 1,
+    ("lookup.collect", "mor"): 0,
     ("lookup.collect", "cow"): 1,
     ("read.count", "mor"): 2,
     ("read.count", "cow"): 2,
