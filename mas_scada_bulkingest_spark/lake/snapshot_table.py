@@ -243,6 +243,11 @@ _COMMIT_ATTEMPTS = 10
 #: per-file manifest maps a commit carries forward from its parent
 _MANIFEST_KEYS = ("file_sizes", "file_stats", "file_key_digests", "file_rows")
 
+#: a copy-on-write merge touching at most this many buckets observes its
+#: applied/skipped/deleted counts per bucket (three conditional sums each
+#: on the write); beyond it, one table-wide triple
+_LINEAGE_BUCKET_LIMIT = 128
+
 
 def _durable_write(path: str, text: str, exclusive: bool = False) -> None:
     """Publish ``text`` at ``path`` atomically and durably: write a private
@@ -677,21 +682,30 @@ def _file_order_stats(abs_path: str, col: str) -> list | None:
 _DIGEST_CAP = 1024
 _DIGEST_SPACE = 1 << 16
 
-#: A merge-on-read ``lookup`` resolves its key on the driver only when the
-#: bucket's digest-kept files total at most this many bytes (the snapshot's
-#: ``file_sizes``); a larger slice goes through the Spark read.
-_LOOKUP_DRIVER_MAX_BYTES = 64 << 20
+#: The merge-on-read LWW resolve runs on the driver (:meth:`SnapshotTable.
+#: _resolve_on_driver`) only over files totalling at most this many bytes
+#: in the snapshot's ``file_sizes``: a ``lookup``'s digest-kept bucket
+#: slice, or all of a ``compact``'s target buckets. Larger inputs go through
+#: Spark.
+_DRIVER_RESOLVE_MAX_BYTES = 64 << 20
 
 #: Column types that pyarrow's sort and hash grouping order and compare as
 #: Spark's struct ordering and grouping do (NaN aside, checked per read):
 #: strings as unsigned UTF-8 bytes, numbers and NTZ timestamps by value,
 #: false below true. A collated string is not ``StringType()``.
-_DRIVER_LOOKUP_TYPES = frozenset(
+_DRIVER_RESOLVE_TYPES = frozenset(
     {
         T.StringType(), T.BooleanType(), T.IntegerType(), T.LongType(),
         T.FloatType(), T.DoubleType(), T.TimestampNTZType(),
     }
 )
+
+#: ``spark.sql.parquet.compression.codec`` values pyarrow writes with the
+#: same parquet codec; any other value keeps ``compact`` on Spark's writer
+_ARROW_PARQUET_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "gzip": "gzip", "brotli": "brotli", "zstd": "zstd",
+}
 
 
 def _nullable(schema: T.StructType) -> T.StructType:
@@ -3459,6 +3473,21 @@ class SnapshotTable(LakeTable):
         compaction, keeping the *per-epoch* amortized cost O(batch). The
         analog of Iceberg's ``rewrite_data_files`` minor compaction.
 
+        Small rewrites submit no Spark job (:meth:`_compact_on_driver`):
+        each target bucket is resolved in Arrow on the driver by the same
+        :meth:`_resolve_on_driver` a ``lookup`` uses, and its winners are
+        written as one parquet file with pyarrow. At this engine's sizes one
+        Spark job costs more than the whole rewrite. The Spark rewrite below
+        takes over, with the same rows and per-file manifest entries, for:
+
+        * ``cluster_files`` > 1;
+        * a storage column outside :data:`_DRIVER_RESOLVE_TYPES`;
+        * a NaN in a float column of any target bucket;
+        * target files totalling more than :data:`_DRIVER_RESOLVE_MAX_BYTES`
+          (64 MiB) in the snapshot's ``file_sizes``;
+        * a ``spark.sql.parquet.compression.codec`` outside
+          :data:`_ARROW_PARQUET_CODECS`.
+
         ``cluster_files=k`` (k > 1) additionally CLUSTERS each rewritten
         bucket on the first LWW-order column (the event-time column): the
         collapsed state is range-sliced into up to k files per bucket whose
@@ -3516,19 +3545,23 @@ class SnapshotTable(LakeTable):
         if not targets:
             return 0
         inputs_by_bucket = self._bucket_inputs(targets)
-        # Bucket-local collapse: each target bucket's branch is one task that
-        # scans its file group, reduces in place (no Exchange — see
-        # ``_read_collapsed_local``), and writes its own partition directory,
-        # so the rewrite needs NO repartition pass either.
-        collapsed = self._read_collapsed_local(buckets=targets, with_bucket_col=True)
         k = max(int(cluster_files), 1)
-        if k > 1:
-            collapsed = collapsed.withColumn(
-                "_slice", self._cluster_slice_expr(targets, k)
+        outputs = self._compact_on_driver(targets) if k == 1 else None
+        if outputs is None:
+            # Bucket-local collapse: each target bucket's branch is one task
+            # that scans its file group, reduces in place (no Exchange — see
+            # ``_read_collapsed_local``), and writes its own partition
+            # directory, so the rewrite needs NO repartition pass either.
+            collapsed = self._read_collapsed_local(
+                buckets=targets, with_bucket_col=True
             )
-        outputs = self._write_buckets(
-            collapsed, "compact", *(["_slice"] if k > 1 else [])
-        )
+            if k > 1:
+                collapsed = collapsed.withColumn(
+                    "_slice", self._cluster_slice_expr(targets, k)
+                )
+            outputs = self._write_buckets(
+                collapsed, "compact", *(["_slice"] if k > 1 else [])
+            )
         applied = 0
 
         def build(cur: dict) -> dict | None:
@@ -3551,6 +3584,61 @@ class SnapshotTable(LakeTable):
             return {**cur, "buckets": new_buckets} if applied else None
 
         return applied if self._commit("compact", build) else 0
+
+    def _compact_on_driver(self, targets: list[int]) -> dict[str, list[str]] | None:
+        """:meth:`compact`'s rewrite of ``targets`` with no Spark job, or
+        None when the driver cannot reproduce the Spark rewrite exactly (the
+        cases :meth:`compact` lists). Every bucket is resolved before any
+        file is written, so a fallback leaves nothing behind.
+
+        Each bucket's :meth:`_resolve_on_driver` winners, key-sorted and in
+        storage-schema column order, become one parquet file under a fresh
+        ``data/compact-<id>/_bucket=<b>/`` in the session's parquet codec; a
+        bucket with no rows writes none, as Spark's ``partitionBy`` does.
+        The file is written under a hidden name without the ``.parquet``
+        suffix and renamed into place, so neither :meth:`_bucket_outputs`
+        nor a Spark listing ever sees it half written. The file's size
+        tracks Spark's: dictionary encoding only for columns with fewer
+        distinct values than half the rows (parquet-mr falls back to plain
+        encoding for the others, where a dictionary only adds bytes), and
+        no Arrow schema in the footer (the parquet types already say
+        everything the readers need)."""
+        codec = _ARROW_PARQUET_CODECS.get(
+            self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
+        )
+        storage = _nullable(self._storage_schema())
+        groups = self._bucket_file_groups(targets)
+        if codec is None or not self._driver_resolvable(
+            [f for _, files in groups for f in files], storage
+        ):
+            return None
+        resolved = []
+        for b, files in groups:
+            t = self._resolve_on_driver(files, storage)
+            if t is None:
+                return None
+            resolved.append((b, t))
+        rel_dir = os.path.join("data", f"compact-{uuid.uuid4().hex[:8]}")
+        for b, t in resolved:
+            if not t.num_rows:
+                continue
+            out_dir = os.path.join(self.path, rel_dir, f"_bucket={b}")
+            os.makedirs(out_dir)
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(out_dir, f".{name}.tmp")
+            pq.write_table(
+                t,
+                tmp,
+                compression=codec,
+                store_schema=False,
+                use_dictionary=[
+                    c
+                    for c in t.column_names
+                    if 2 * pc.count_distinct(t[c]).as_py() < t.num_rows
+                ],
+            )
+            os.replace(tmp, os.path.join(out_dir, name))
+        return self._bucket_outputs(rel_dir)
 
     def maintain(
         self,
@@ -4882,10 +4970,11 @@ class SnapshotTable(LakeTable):
         ``last_read_pruned_files``.
 
         On a merge-on-read table the kept files are then resolved on the
-        driver (:meth:`_lookup_on_driver`): a pyarrow read under the pinned
-        storage schema with the key equality pushed into row-group
-        statistics (bootstrap and compaction write key-sorted files), and
-        ``read()``'s last-writer-wins rule applied in Arrow. The result is
+        driver (:meth:`_resolve_on_driver`, shared with ``compact``): a
+        pyarrow read under the pinned storage schema with the key equality
+        pushed into row-group statistics (bootstrap and compaction write
+        key-sorted files), and ``read()``'s last-writer-wins rule applied
+        in Arrow. The result is
         ``createDataFrame`` over the Arrow table, a local relation, so
         ``lookup(k).collect()`` submits no Spark job. The Spark read below
         takes over, with the same result, when the driver cannot resolve
@@ -4893,12 +4982,12 @@ class SnapshotTable(LakeTable):
 
         * a key value whose Python type is not the column's (``7`` or
           ``True`` on a string key compares as the text Spark stored);
-        * a column outside :data:`_DRIVER_LOOKUP_TYPES` — a collated
+        * a column outside :data:`_DRIVER_RESOLVE_TYPES` — a collated
           string, a date, a decimal, a nested column — or a key column that
           is not a string, int or long;
         * a NaN in a float column of the key's rows (Arrow sorts NaN below
           numbers, Spark above);
-        * kept files totalling more than :data:`_LOOKUP_DRIVER_MAX_BYTES`
+        * kept files totalling more than :data:`_DRIVER_RESOLVE_MAX_BYTES`
           (64 MiB) in the snapshot's ``file_sizes``.
 
         Copy-on-write lookups always take the Spark read of the bucket with
@@ -4944,35 +5033,57 @@ class SnapshotTable(LakeTable):
         project: set | None,
         out_schema: T.StructType,
     ) -> DataFrame | None:
-        """:meth:`lookup`'s merge-on-read resolve in Arrow on the driver, or
-        None when the request is not one it resolves exactly (the cases
-        :meth:`lookup` lists). Mirrors :meth:`_collapsed_branch`: NULL
-        ``_tombstone`` reads false and NULL ``_patched`` 0, and the winner
-        per key is the greatest ``order + _tombstone (+ _patched) +
-        carried columns`` tuple with NULL lowest."""
+        """:meth:`lookup`'s merge-on-read path: the key's live rows resolved
+        by :meth:`_resolve_on_driver`, or None when the request is not one
+        the driver resolves exactly (the cases :meth:`lookup` lists)."""
         # every column nullable, as Spark's parquet scan and read() have it
         storage = _nullable(self._storage_schema(project))
-        key = list(self.key)
         dtypes = {f.name: f.dataType for f in storage.fields}
+        key = list(self.key)
         if not (
-            all(t in _DRIVER_LOOKUP_TYPES for t in dtypes.values())
-            and all(
-                dtypes[c] == T.StringType() or dtypes[c] in _INT_WIDTH for c in key
-            )
+            all(dtypes[c] == T.StringType() or dtypes[c] in _INT_WIDTH for c in key)
             and all(_is_column_value(v, dtypes[c]) for c, v in zip(key, key_values))
-            and manifest_file_bytes(
-                self._snapshot.get("file_sizes", {}), self.path, files
-            )
-            <= _LOOKUP_DRIVER_MAX_BYTES
+            and self._driver_resolvable(files, storage)
         ):
             return None
-        aliases, wide = self._alias_schema(storage)
-        arrow_schema = to_arrow_schema(wide)
+        arrow_schema = to_arrow_schema(storage)
         match = None
         for c, v in zip(key, key_values):
             term = ds.field(c) == pa.scalar(v, arrow_schema.field(c).type)
             match = term if match is None else match & term
-        t = ds.dataset(files, schema=arrow_schema, format="parquet").to_table(
+        t = self._resolve_on_driver(files, storage, match)
+        if t is None:
+            return None
+        t = t.filter(pc.invert(t[_TOMBSTONE]))
+        return self.spark.createDataFrame(
+            t.select(out_schema.fieldNames()), _nullable(out_schema)
+        )
+
+    def _driver_resolvable(self, files: list[str], storage: T.StructType) -> bool:
+        """True when :meth:`_resolve_on_driver` may take ``files`` under
+        ``storage``: every column's type is in :data:`_DRIVER_RESOLVE_TYPES`
+        and the files total at most :data:`_DRIVER_RESOLVE_MAX_BYTES`."""
+        return all(f.dataType in _DRIVER_RESOLVE_TYPES for f in storage.fields) and (
+            manifest_file_bytes(self._snapshot.get("file_sizes", {}), self.path, files)
+            <= _DRIVER_RESOLVE_MAX_BYTES
+        )
+
+    def _resolve_on_driver(
+        self, files: list[str], storage: T.StructType, match=None
+    ) -> pa.Table | None:
+        """Merge-on-read LWW of ``files`` in Arrow on the driver: one row
+        per key under ``storage`` (nullable), sorted by key, tombstones
+        KEPT; None when a float column holds a NaN (Arrow sorts NaN below
+        numbers, Spark above). ``match`` is a ``pyarrow.dataset`` filter
+        pushed into the read. Mirrors :meth:`_collapsed_branch`: NULL
+        ``_tombstone`` reads false and NULL ``_patched`` 0, and the winner
+        per key is the greatest ``order + _tombstone (+ _patched) +
+        carried columns`` tuple with NULL lowest. The caller checks the
+        types and bytes (:meth:`_driver_resolvable`)."""
+        key = list(self.key)
+        dtypes = {f.name: f.dataType for f in storage.fields}
+        aliases, wide = self._alias_schema(storage)
+        t = ds.dataset(files, schema=to_arrow_schema(wide), format="parquet").to_table(
             filter=match
         )
         cols = {c: t[c] for c in dtypes}
@@ -4991,11 +5102,7 @@ class SnapshotTable(LakeTable):
             order.append(_PATCHED)
         t = pa.table(cols)
         carried = [c for c in cols if c not in key and c not in order]
-        t = newest_per(t, {c: t[c] for c in key}, order + carried)
-        t = t.filter(pc.invert(t[_TOMBSTONE]))
-        return self.spark.createDataFrame(
-            t.select(out_schema.fieldNames()), _nullable(out_schema)
-        )
+        return newest_per(t, {c: t[c] for c in key}, order + carried)
 
     def _validate_key_prefix(self, op: str, key_values: tuple) -> list[str]:
         key = list(self.key)
@@ -5344,9 +5451,7 @@ class SnapshotTable(LakeTable):
                 # surviving row of each affected bucket (not just this
                 # epoch's changes), so applied/skipped cannot be recovered
                 # from the files afterwards the way MoR does it.
-                per_bucket = len(affected) <= int(
-                    os.environ.get("SNAPSHOT_LINEAGE_BUCKET_LIMIT", "128")
-                )
+                per_bucket = len(affected) <= _LINEAGE_BUCKET_LIMIT
                 obs = Observation()
                 exprs = []
                 codes = ((_V_APPLY, "a"), (_V_SKIP, "s"), (_V_DELETE, "d"))

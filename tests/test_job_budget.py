@@ -61,7 +61,10 @@ BUDGET = {
     ("history.collect", "cow"): 1,
     ("verify_integrity", "mor"): 0,
     ("verify_integrity", "cow"): 0,
-    ("compact", "mor"): 1,
+    # plain compaction below the byte cap, on the driver; the Spark rewrite
+    # it falls back to (clustered, over the cap, NaN, other types) is held
+    # to the driver's output by tests/test_compact_driver_path.py instead
+    ("compact", "mor"): 0,
     ("vacuum", "mor"): 0,
     ("vacuum", "cow"): 0,
     ("purge_key", "mor"): 3,

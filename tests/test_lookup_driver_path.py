@@ -235,7 +235,7 @@ def test_bucket_over_the_byte_cap_falls_back(spark, tmpdir_path, monkeypatch):
             e,
         )
     _check(spark, tbl, "c1")
-    monkeypatch.setattr(snapshot_table, "_LOOKUP_DRIVER_MAX_BYTES", 0)
+    monkeypatch.setattr(snapshot_table, "_DRIVER_RESOLVE_MAX_BYTES", 0)
     _check(spark, tbl, "c1", driver=False)
 
 
