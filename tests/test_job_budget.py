@@ -30,7 +30,9 @@ DDL = (
 #: (operation, mode) -> max Spark jobs. "merge" is a non-compacting
 #: ``merge_changes`` into a table that already holds every touched bucket;
 #: "apply_changes" is the whole epoch on top of it (parse, LWW collapse,
-#: and the copy-on-write bucket-stats pass).
+#: and the copy-on-write bucket-stats pass). "bootstrap" loads a second,
+#: empty table; the maintenance rows after "purge_key" run in dict order on
+#: the table the earlier rows left behind.
 BUDGET = {
     ("merge", "mor"): 2,
     ("merge", "cow"): 6,
@@ -69,6 +71,16 @@ BUDGET = {
     ("vacuum", "cow"): 0,
     ("purge_key", "mor"): 3,
     ("purge_key", "cow"): 3,
+    ("delete_where", "mor"): 3,
+    ("delete_where", "cow"): 3,
+    ("update_where", "mor"): 3,
+    ("update_where", "cow"): 3,
+    ("purge_tombstones", "mor"): 3,
+    ("purge_tombstones", "cow"): 3,
+    ("rebucket", "mor"): 2,
+    ("rebucket", "cow"): 2,
+    ("bootstrap", "mor"): 2,
+    ("bootstrap", "cow"): 2,
 }
 
 
@@ -96,6 +108,7 @@ def test_job_budget(spark, tmpdir_path, mode):
         )
 
     tbl = create_transcripts_table(spark, tmpdir_path + "/t", n_buckets=4, mode=mode)
+    empty = create_transcripts_table(spark, tmpdir_path + "/b", n_buckets=4, mode=mode)
     tbl.merge_changes(batch(0), 0)
     tbl.merge_changes(batch(1), 1)
     ops = {
@@ -117,6 +130,11 @@ def test_job_budget(spark, tmpdir_path, mode):
         "compact": lambda: tbl.compact(max_files=1),
         "vacuum": lambda: tbl.vacuum(),
         "purge_key": lambda: tbl.purge_key("c1"),
+        "delete_where": lambda: tbl.delete_where("turn_idx = 1"),
+        "update_where": lambda: tbl.update_where("turn_idx = 2", {"text": "'y'"}),
+        "purge_tombstones": lambda: tbl.purge_tombstones(),
+        "rebucket": lambda: tbl.rebucket(3),
+        "bootstrap": lambda: empty.bootstrap(batch(4), 4),
     }
     seen = {
         op: jobs_of(fn) for op, fn in ops.items() if (op, mode) in BUDGET
