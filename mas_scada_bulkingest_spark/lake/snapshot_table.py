@@ -52,6 +52,7 @@ import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -269,11 +270,21 @@ def _durable_write(path: str, text: str, exclusive: bool = False) -> None:
         os.unlink(tmp)
 
 
-def _append_buckets(buckets: dict, added: dict) -> dict:
-    """A copy of the ``buckets`` map with ``added`` files appended per
-    bucket (files already listed are not repeated). Appends rebase onto
-    any concurrent commit: LWW layering stays correct over it."""
-    out = {b: list(fs) for b, fs in buckets.items()}
+def _append_buckets(cur: dict, added: dict, n_buckets: int) -> dict:
+    """``cur``'s bucket map with ``added`` files appended per bucket (files
+    already listed are not repeated) — the one merge-on-read append-rebase
+    rule. Appends rebase onto any concurrent commit (LWW layering stays
+    correct over it) EXCEPT a reshard: files bucketed under ``n_buckets``
+    cannot graft onto a snapshot bucketed under another count (``rebucket``
+    or a ``restore`` across one), so that raises
+    :class:`ConcurrentCommitError` and the caller's work stays replayable."""
+    if int(cur["n_buckets"]) != int(n_buckets):
+        raise ConcurrentCommitError(
+            f"files bucketed with n_buckets={n_buckets} cannot append to a "
+            f"snapshot bucketed with n_buckets={cur['n_buckets']} (the table "
+            f"was resharded concurrently); reload and re-run"
+        )
+    out = {b: list(fs) for b, fs in cur["buckets"].items()}
     for b, fs in added.items():
         have = set(out.get(b, ()))
         out[b] = out.get(b, []) + [f for f in fs if f not in have]
@@ -1192,6 +1203,58 @@ class SnapshotTable(LakeTable):
             for b in buckets
         }
 
+    def _bucket_state(self, buckets: list[int] | None = None) -> DataFrame | None:
+        """The stored state of ``buckets`` (all when None), tombstones
+        included, each row tagged with its ``_bucket`` so a maintenance
+        rewrite can ``partitionBy`` with no repartition pass: under MoR the
+        bucket-local LWW collapse (dropping a tombstone or patching a row
+        while an older version survives in an earlier delta would resurrect
+        that version; the collapse also compacts what it rewrites), under
+        CoW the raw scan (its files are already bucket-pure). None when no
+        files exist."""
+        if self.mode == "mor":
+            return self._read_collapsed_local(buckets=buckets, with_bucket_col=True)
+        raw = self._read_raw(buckets=buckets)
+        if raw is None:
+            return None
+        return raw.withColumn("_bucket", _bucket_expr(self.key[0], self.n_buckets))
+
+    def _live_match(self, op: str, predicate: str):
+        """``predicate`` as a non-null boolean column over LIVE rows: NULL
+        (three-valued logic) and tombstones never match. Raises
+        ``ValueError`` naming ``op`` when it does not resolve against the
+        table schema as a boolean."""
+        try:
+            self.read().limit(0).select(F.expr(predicate).cast("boolean"))
+        except Exception as e:
+            raise ValueError(
+                f"{op}: predicate {predicate!r} does not resolve "
+                f"against the table schema as a boolean: {e}"
+            ) from None
+        return F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False)) & ~F.col(
+            _TOMBSTONE
+        )
+
+    def _hit_buckets(self, hit) -> tuple[list[int], int] | None:
+        """``(sorted bucket ids holding a row where hit, total such rows)``
+        over :meth:`_bucket_state` — ONE map-side count job (≤ n_buckets
+        rows collected) — or None when nothing matches."""
+        state = self._bucket_state()
+        if state is None:
+            return None
+        per_bucket = (
+            state.groupBy("_bucket")
+            .agg(F.sum(hit.cast("long")).alias("_hits"))
+            .filter(F.col("_hits") > 0)
+            .collect()
+        )
+        if not per_bucket:
+            return None
+        return (
+            sorted(int(r["_bucket"]) for r in per_bucket),
+            int(sum(r["_hits"] for r in per_bucket)),
+        )
+
     # ----------------------------------------------------------- public API
     @property
     def schema(self) -> T.StructType:
@@ -1937,7 +2000,12 @@ class SnapshotTable(LakeTable):
         re-fold the epoch log, re-merge the schema — the same rebuild a
         conflicting ``merge_changes`` commit does); copy-on-write stages raise
         :class:`ConcurrentCommitError` (their rewrite is only valid against
-        the exact parent file set). Publishing an epoch something else
+        the exact parent file set). A merge-on-read stage raises too when a
+        reshard (``rebucket``, or ``restore`` to another bucket count)
+        landed since staging: its deltas are bucketed under the old layout.
+        Whichever of the append and the reshard commits second raises, and
+        the epoch stays uncommitted — ``abort_staged`` and re-merge it.
+        Publishing an epoch something else
         already committed is a no-op either way (exactly-once holds across
         the stage/publish split)."""
         staged = self._load_staged(ref)
@@ -1959,18 +2027,10 @@ class SnapshotTable(LakeTable):
                     f"{staged['staged_parent']} but the table is at "
                     f"{cur['version']}; abort_staged and re-merge"
                 )
-            if int(cur["n_buckets"]) != int(staged["n_buckets"]):
-                # a rebucket() landed between stage and publish: the staged
-                # deltas are bucketed under the OLD layout and cannot graft
-                raise ConcurrentCommitError(
-                    f"staged epoch {epoch!r} was bucketed with n_buckets="
-                    f"{staged['n_buckets']} but the table was resharded to "
-                    f"{cur['n_buckets']}; abort_staged and re-merge"
-                )
             return {
                 **cur,
                 "buckets": _append_buckets(
-                    cur["buckets"], staged.get("staged_added", {})
+                    cur, staged.get("staged_added", {}), staged["n_buckets"]
                 ),
                 **_with_epoch(
                     cur,
@@ -2249,6 +2309,10 @@ class SnapshotTable(LakeTable):
           columns) or a type that is not the declared type nor losslessly
           widenable to it is ``schema_drift`` (hard failure: the pinned
           scan would read garbage or nulls);
+        * every bucket id the snapshot lists lies in ``[0, n_buckets)``
+          (``out_of_range_buckets`` — any entry is a hard failure: those
+          files were bucketed under another layout, e.g. grafted across a
+          reshard, and every bucket-routed read or lookup misses them);
         * lineage epoch keys that never committed (``uncommitted_lineage
           _epochs``, a ≤20-key sample with ``uncommitted_lineage_total``
           for the full count — benign at-least-once leftovers of a crash
@@ -2283,6 +2347,10 @@ class SnapshotTable(LakeTable):
             if not os.path.exists(os.path.join(self.path, f))
         ]
         missing_set = set(missing)
+        out_of_range = sorted(
+            (b for b in snap["buckets"] if not 0 <= int(b) < int(snap["n_buckets"])),
+            key=int,
+        )
 
         # footer-vs-declared schema audit
         import pyarrow as pa
@@ -2419,12 +2487,18 @@ class SnapshotTable(LakeTable):
                 bad_total = allp.agg(F.sum("bad")).first()[0] or 0
             bucket_mismatches = int(bad_total)
 
-        ok = not missing and not drift and not (deep and bucket_mismatches)
+        ok = (
+            not missing
+            and not drift
+            and not out_of_range
+            and not (deep and bucket_mismatches)
+        )
         return {
             "ok": bool(ok),
             "files_checked": len(referenced),
             "missing_files": missing,
             "schema_drift": drift,
+            "out_of_range_buckets": out_of_range,
             # a ≤20-key sample; the total says whether it was truncated
             "uncommitted_lineage_epochs": uncommitted,
             "uncommitted_lineage_total": uncommitted_total,
@@ -2892,56 +2966,21 @@ class SnapshotTable(LakeTable):
         rebase, like ``compact``; a concurrent rewrite of an affected bucket
         raises :class:`ConcurrentCommitError`.
         """
-        if self.mode == "mor":
-            # Collapse to winners first (bucket-locally, no Exchange):
-            # dropping a tombstone while an older live version of the same
-            # key survives in an earlier delta file would RESURRECT that
-            # version at read time. Collapsing also compacts the rewritten
-            # buckets as a side effect.
-            raw_all = self._read_collapsed_local(with_bucket_col=True)
-        else:
-            raw_all = self._read_raw()
-            if raw_all is not None:
-                # CoW files are already bucket-pure on disk, so tagging rows
-                # with their bucket id and letting the dynamic-partition
-                # writer split per value needs NO repartition exchange.
-                raw_all = raw_all.withColumn(
-                    "_bucket", _bucket_expr(list(self.key)[0], self.n_buckets)
-                )
-        if raw_all is None:
+        dead = F.col(_TOMBSTONE)
+        if before_lsn is not None and "lsn" in self.schema.fieldNames():
+            # Null-safe: a tombstone with NULL lsn must be RETAINED (kept
+            # on the keep side), not silently dropped by 3-valued logic.
+            dead = dead & F.coalesce(
+                F.col("lsn") < F.lit(int(before_lsn)), F.lit(False)
+            )
+        matched = self._hit_buckets(dead)
+        if matched is None:
             return 0
-
-        def _dead(df):
-            is_dead = F.col(_TOMBSTONE)
-            if before_lsn is not None and "lsn" in df.columns:
-                # Null-safe: a tombstone with NULL lsn must be RETAINED (kept
-                # on the keep side), not silently dropped by 3-valued logic.
-                is_dead = is_dead & F.coalesce(
-                    F.col("lsn") < F.lit(int(before_lsn)), F.lit(False)
-                )
-            return is_dead
-
-        per_bucket = (
-            raw_all.groupBy("_bucket")
-            .agg(F.sum(_dead(raw_all).cast("long")).alias("_hits"))
-            .filter(F.col("_hits") > 0)
-            .collect()
-        )  # bounded: ≤ n_buckets rows
-        if not per_bucket:
-            return 0
-        affected = sorted(int(r["_bucket"]) for r in per_bucket)
-        n_purge = int(sum(r["_hits"] for r in per_bucket))
+        affected, n_purge = matched
         inputs_by_bucket = self._bucket_inputs(affected)
-        if self.mode == "mor":
-            raw = self._read_collapsed_local(
-                buckets=affected, with_bucket_col=True
-            )
-        else:
-            raw = self._read_raw(buckets=affected).withColumn(
-                "_bucket", _bucket_expr(list(self.key)[0], self.n_buckets)
-            )
+        raw = self._bucket_state(affected)
         # a bucket whose every row was purged writes nothing and empties
-        outputs = self._write_buckets(raw.filter(~_dead(raw)), "purge")
+        outputs = self._write_buckets(raw.filter(~dead), "purge")
         self._commit(
             "purge_tombstones",
             lambda cur: {
@@ -2991,56 +3030,24 @@ class SnapshotTable(LakeTable):
         isolation: rows that start matching after the count pass are not
         deleted). Raises ``ValueError`` if the predicate does not resolve
         as a boolean. Concurrency: the MoR append is order-correct under
-        ANY concurrent commit (a racing newer update wins over the
-        tombstone, a stale one loses, compaction preserves winners) so it
-        rebases and retries; the CoW rewrite raises
+        any concurrent commit but a reshard (a racing newer update wins
+        over the tombstone, a stale one loses, compaction preserves
+        winners) so it rebases and retries; a concurrent ``rebucket`` or
+        cross-layout ``restore`` raises ``ConcurrentCommitError`` (its
+        tombstones are bucketed under the old count); the CoW rewrite raises
         ``ConcurrentCommitError`` if a writer rewrote an affected bucket
         meanwhile (re-run against new state).
         """
-        try:
-            self.read().limit(0).select(F.expr(predicate).cast("boolean"))
-        except Exception as e:
-            raise ValueError(
-                f"delete_where: predicate {predicate!r} does not resolve "
-                f"against the table schema as a boolean: {e}"
-            ) from None
-        key = list(self.key)
-        order = list(self.order)
+        hit = self._live_match("delete_where", predicate)
         nb = self.n_buckets
-        if self.mode == "mor":
-            raw_all = self._read_collapsed_local(with_bucket_col=True)
-        else:
-            raw_all = self._read_raw()
-            if raw_all is not None:
-                raw_all = raw_all.withColumn(
-                    "_bucket", _bucket_expr(key[0], nb)
-                )
-        if raw_all is None:
+        matched = self._hit_buckets(hit)
+        if matched is None:
             return 0
-        hit = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False)) & ~F.col(
-            _TOMBSTONE
-        )
-        per_bucket = (
-            raw_all.groupBy("_bucket")
-            .agg(F.sum(hit.cast("long")).alias("_hits"))
-            .filter(F.col("_hits") > 0)
-            .collect()
-        )
-        if not per_bucket:
-            return 0
-        affected = sorted(int(r["_bucket"]) for r in per_bucket)
-        n_deleted = int(sum(r["_hits"] for r in per_bucket))
-        keep_cols = set(key) | set(order) | {"_bucket", _TOMBSTONE}
+        affected, n_deleted = matched
+        keep_cols = set(self.key) | set(self.order) | {"_bucket", _TOMBSTONE}
         mor = self.mode == "mor"
         inputs_by_bucket = self._bucket_inputs(affected)
-        if mor:
-            raw = self._read_collapsed_local(
-                buckets=affected, with_bucket_col=True
-            )
-        else:
-            raw = self._read_raw(buckets=affected).withColumn(
-                "_bucket", _bucket_expr(key[0], nb)
-            )
+        raw = self._bucket_state(affected)
         # matched live rows -> tombstones carrying the row's OWN order
         # tuple: key + order + bucket kept, payload NULLed (a tombstone's
         # payload is NULL by contract; `when(hit, NULL)` keeps each
@@ -3060,7 +3067,8 @@ class SnapshotTable(LakeTable):
         )
         # MoR — deletion-vector path: only the tombstones are written, as a
         # per-bucket delta appended onto whatever the table holds at commit
-        # (LWW layering stays correct over any concurrent commit). CoW —
+        # (LWW layering stays correct over any concurrent commit but a
+        # reshard, which _append_buckets refuses). CoW —
         # targeted rewrite of the matched buckets, everything else carried.
         rows = rows.filter(F.col("_hit")) if mor else rows
         outputs = self._write_buckets(rows.drop("_hit"), "deletewhere")
@@ -3068,7 +3076,7 @@ class SnapshotTable(LakeTable):
             "delete_where",
             lambda cur: {
                 **cur,
-                "buckets": _append_buckets(cur["buckets"], outputs)
+                "buckets": _append_buckets(cur, outputs, nb)
                 if mor
                 else _swap_buckets(cur, inputs_by_bucket, outputs),
             },
@@ -3127,13 +3135,7 @@ class SnapshotTable(LakeTable):
         rewrite raises :class:`ConcurrentCommitError` if an affected
         bucket was rewritten meanwhile.
         """
-        try:
-            self.read().limit(0).select(F.expr(predicate).cast("boolean"))
-        except Exception as e:
-            raise ValueError(
-                f"update_where: predicate {predicate!r} does not resolve "
-                f"against the table schema as a boolean: {e}"
-            ) from None
+        hit = self._live_match("update_where", predicate)
         if not set_exprs:
             raise ValueError("update_where: empty assignment set")
         key = list(self.key)
@@ -3164,39 +3166,9 @@ class SnapshotTable(LakeTable):
                 f"update_where: an assignment expression does not resolve "
                 f"against the table schema: {e}"
             ) from None
-        nb = self.n_buckets
-        hit = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False)) & ~F.col(
-            _TOMBSTONE
-        )
-
-        def _affected_buckets() -> tuple[list[int], int] | None:
-            """(matched buckets, matched-row count) against the CURRENT
-            snapshot, or None when nothing matches. Re-invoked on MoR
-            rebase so a retry sees concurrent commits' effects."""
-            if self.mode == "mor":
-                raw_all = self._read_collapsed_local(with_bucket_col=True)
-            else:
-                raw_all = self._read_raw()
-                if raw_all is not None:
-                    raw_all = raw_all.withColumn(
-                        "_bucket", _bucket_expr(key[0], nb)
-                    )
-            if raw_all is None:
-                return None
-            per_bucket = (
-                raw_all.groupBy("_bucket")
-                .agg(F.sum(hit.cast("long")).alias("_hits"))
-                .filter(F.col("_hits") > 0)
-                .collect()
-            )  # bounded: <= n_buckets rows
-            if not per_bucket:
-                return None
-            return (
-                sorted(int(r["_bucket"]) for r in per_bucket),
-                int(sum(r["_hits"] for r in per_bucket)),
-            )
-
-        matched = _affected_buckets()
+        # (matched buckets, matched-row count) against the CURRENT snapshot;
+        # re-derived on MoR rebase so a retry sees concurrent commits' effects
+        matched = self._hit_buckets(hit)
         if matched is None:
             return 0
         affected, n_updated = matched
@@ -3257,12 +3229,10 @@ class SnapshotTable(LakeTable):
                 not payload-value order."""
                 nonlocal matched
                 if cur["version"] != v0:
-                    matched = _affected_buckets()
+                    matched = self._hit_buckets(hit)
                     if matched is None:
                         return None
-                raw = self._read_collapsed_local(
-                    buckets=matched[0], with_bucket_col=True
-                )
+                raw = self._bucket_state(matched[0])
                 # first-ever patch on this table: the collapsed read
                 # predates the snapshot flag, so the column may not exist
                 prev_seq = (
@@ -3281,7 +3251,7 @@ class SnapshotTable(LakeTable):
                 appended = self._write_buckets(patched, "updatewhere")
                 return {
                     **cur,
-                    "buckets": _append_buckets(cur["buckets"], appended),
+                    "buckets": _append_buckets(cur, appended, self.n_buckets),
                     # arms the _patched order key for every future read
                     # (_has_patches) — never cleared: compact/rebucket
                     # materialize winners' patch seqs into rewrite files
@@ -3291,10 +3261,7 @@ class SnapshotTable(LakeTable):
             return matched[1] if self._commit("update_where", build) else 0
         # ---- CoW: targeted bucket rewrite (patched in place, no marker)
         inputs_by_bucket = self._bucket_inputs(affected)
-        raw = self._read_raw(buckets=affected).withColumn(
-            "_bucket", _bucket_expr(key[0], nb)
-        )
-        rewritten = _patch_cols(raw, hit)
+        rewritten = _patch_cols(self._bucket_state(affected), hit)
         _enforce_constraints(rewritten.filter(F.col("_hit")))
         outputs = self._write_buckets(rewritten.drop("_hit"), "updatewhere")
         self._commit(
@@ -3348,16 +3315,9 @@ class SnapshotTable(LakeTable):
                 .parquet(*paths)
                 .filter(~hit)
             )
-            rel_dir = os.path.join(
-                "quarantine", f"scrub-{uuid.uuid4().hex[:8]}"
+            new_map[ek] = self._write_files(
+                keep, os.path.join("quarantine", f"scrub-{uuid.uuid4().hex[:8]}")
             )
-            out_dir = os.path.join(self.path, rel_dir)
-            keep.write.mode("overwrite").parquet(out_dir)
-            new_map[ek] = [
-                os.path.join(rel_dir, fn)
-                for fn in os.listdir(out_dir)
-                if fn.endswith(".parquet")
-            ]
         scrubbed = set(qmap) - set(new_map)  # fully-scrubbed epochs
 
         def build(cur: dict) -> dict:
@@ -3422,10 +3382,7 @@ class SnapshotTable(LakeTable):
             if n_quarantine and expire_history:
                 self.vacuum(retain_versions=1)
             return n_quarantine
-        if self.mode == "mor":
-            rows = self._read_collapsed_local(buckets=[b])
-        else:
-            rows = self._read_raw(buckets=[b])
+        rows = self._bucket_state([b])
         # tombstones for the key carry NULL payload but real key cols, so
         # the same predicate matches them; NULL-keyed rows (never produced
         # by the engine, but cheap to be safe about) are KEPT, not dropped
@@ -3436,16 +3393,7 @@ class SnapshotTable(LakeTable):
             if n_quarantine and expire_history:
                 self.vacuum(retain_versions=1)
             return n_quarantine
-        keep = rows.filter(~hit)
-        rel_dir = os.path.join("data", f"purgekey-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
-        keep.write.mode("overwrite").parquet(out_dir)
-        new_files = [
-            os.path.join(rel_dir, fn)
-            for fn in os.listdir(out_dir)
-            if fn.endswith(".parquet")
-        ]
-        outputs = {str(b): new_files} if new_files else {}
+        outputs = self._write_buckets(rows.filter(~hit), "purgekey")
         self._commit(
             "purge_key",
             lambda cur: {
@@ -3750,24 +3698,24 @@ class SnapshotTable(LakeTable):
         Single-writer by contract (like vacuum): a concurrent epoch commit
         raises ``ConcurrentCommitError`` and the reshard simply did not
         happen — rerun it; no torn state is possible (the old snapshot
-        stays current until the CAS).
+        stays current until the CAS). The converse holds for merge-on-read
+        appends (``merge_changes``, ``delete_where``, ``publish_staged``)
+        planned under the old bucket count: one that commits after the
+        reshard raises ``ConcurrentCommitError`` instead of grafting its
+        files (:func:`_append_buckets`). Whichever of the two commits
+        second raises, and the epoch stays uncommitted and replayable.
         """
         nb = int(n_buckets)
         if nb < 1:
             raise ValueError(f"n_buckets must be >= 1, got {nb}")
         if nb == self.n_buckets:
             return 0
-        bucket_col = list(self.key)[0]
-        df = (
-            self._read_collapsed_local()
-            if self.mode == "mor"
-            else self._read_raw()
-        )
+        df = self._bucket_state()
         new_buckets: dict[str, list[str]] = {}
         if df is not None:
-            storage = self._storage_schema()
-            df = align_schemas(df, storage).withColumn(
-                "_bucket", _bucket_expr(bucket_col, nb)
+            # align_schemas drops the old layout's _bucket tag
+            df = align_schemas(df, self._storage_schema()).withColumn(
+                "_bucket", _bucket_expr(self.key[0], nb)
             )
             with self._conf_overrides(
                 {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
@@ -3815,7 +3763,10 @@ class SnapshotTable(LakeTable):
 
         Returns the new current version. Raises
         :class:`ConcurrentCommitError` if another writer commits first
-        (reload and retry)."""
+        (reload and retry). A restore to a version with another
+        ``n_buckets`` is a reshard: as with :meth:`rebucket`, a
+        merge-on-read append planned under the old bucket count that
+        commits after it raises, and its epoch stays replayable."""
         self._snapshot = self._read_current_snapshot()
         cur = self._snapshot
         if version == int(cur["version"]):
@@ -4412,11 +4363,18 @@ class SnapshotTable(LakeTable):
         relative file list for the snapshot's ``quarantine_files`` registry.
         Crash before the registering commit leaves the directory as an
         unreferenced orphan — ``vacuum`` reaps it, same as data files."""
-        rel_dir = os.path.join(
-            "quarantine", f"epoch={_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}"
+        return self._write_files(
+            qdf,
+            os.path.join(
+                "quarantine", f"epoch={_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}"
+            ),
         )
+
+    def _write_files(self, df: DataFrame, rel_dir: str) -> list[str]:
+        """Write ``df`` unpartitioned into ``rel_dir``; returns the relative
+        parquet paths written."""
         out_dir = os.path.join(self.path, rel_dir)
-        qdf.write.mode("overwrite").parquet(out_dir)
+        df.write.mode("overwrite").parquet(out_dir)
         return [
             os.path.join(rel_dir, fn)
             for fn in os.listdir(out_dir)
@@ -4731,6 +4689,160 @@ class SnapshotTable(LakeTable):
         # the enrichment carry-forward
         return int(self._commit_pinned("fast_forward", snap, seed=fsnap)["version"])
 
+    # ------------------------------------------------- epoch write phases
+    # merge_changes and bootstrap share these three: admission before the
+    # write, settlement after it, lineage just before the snapshot commit.
+    def _admit(
+        self, batch: DataFrame, epoch_id
+    ) -> tuple[DataFrame, T.StructType, tuple]:
+        """Admission phase of an epoch write: map a rename-lagging batch
+        onto the current names, compute the generated columns it omits,
+        attach the CHECK-constraint flags, filter drop/quarantine-mode
+        violators, apply the schema-evolution policy and merge the batch's
+        schema into the table's.
+
+        Constraint flags + counts ride the batch's own plan (Observation =
+        CollectMetrics, map-side conditional sums — zero extra passes), so
+        the first job that executes the batch counts them; drop- and
+        quarantine-mode rows are filtered here, before any pre-pass or
+        write sees them. Quarantine violators are captured as a SEPARATE
+        pre-observe plan, executed only if the write job's counts say any
+        exist (:meth:`_settle`).
+
+        Returns ``(batch, new_schema, checks)``; ``checks`` is what
+        :meth:`_settle` reads: ``(constraints, observation, quarantine
+        plan)``."""
+        # sources lagging a rename_column deliver under the old name — map
+        # them onto the current schema before any schema work
+        batch = self._canonicalize_batch_columns(batch)
+        # generated columns the batch omits are computed here (map-side,
+        # fused); supplied ones are validated by their implicit gen_* fail
+        # constraint below
+        batch = self._apply_generated(batch)
+        cons = self._snapshot.get("constraints", {})
+        obs = q_df = None
+        if cons:
+            aug, flags, helpers = self._constraint_checks(batch)
+            q_names = [n for n, c in cons.items() if c["mode"] == "quarantine"]
+            if q_names:
+                q_df = self._quarantine_df(aug, flags, q_names, epoch_id)
+            obs = Observation()
+            aug = aug.observe(
+                obs,
+                *[
+                    F.sum(F.when(v, 1).otherwise(0)).alias(f"v_{n}")
+                    for n, v in flags.items()
+                ],
+            )
+            drop_flags = [
+                flags[n]
+                for n, c in cons.items()
+                if c["mode"] in ("drop", "quarantine")
+            ]
+            if drop_flags:
+                aug = aug.filter(~reduce(lambda a, b: a | b, drop_flags))
+            batch = aug.drop(*helpers) if helpers else aug
+        # dropped names never re-evolve in: a batch still carrying a
+        # drop_column'd column must not re-add it (the schema-pinned read
+        # would resurrect the OLD values from retained files — see
+        # drop_column's field-id note)
+        dropped = set(self._snapshot.get("dropped_columns", []))
+        incoming = T.StructType(
+            [
+                f
+                for f in batch.schema.fields
+                if f.name not in ("op", "_max_lsn") and f.name not in dropped
+            ]
+        )
+        self._enforce_evolution_policy(incoming)
+        new_schema = merge_schemas(
+            self.schema, incoming, allow_widening=self.type_widening
+        )
+        return batch, new_schema, (cons, obs, q_df)
+
+    def _settle(
+        self, epoch_id, checks: tuple, counted: bool, timings: dict | None = None
+    ) -> tuple[dict | None, list[str]]:
+        """Settlement phase of an epoch write, after its data files are
+        written and before lineage and the commit: the CHECK-constraint
+        verdicts of :meth:`_admit`'s ``checks``.
+
+        A fail-mode violation raises HERE, so nothing violating is ever
+        visible; the written files are orphans for vacuum, exactly like a
+        crash between write and commit. Quarantine rows persist only when a
+        quarantine-mode constraint actually fired (violation-free epochs
+        never pay the extra batch pass); the commit registers them, so a
+        crash before it leaves unregistered orphans and a replayed committed
+        epoch never double-quarantines (its was_noop short-circuit). The
+        counts go to the constraint-metrics event log either way.
+
+        ``counted`` says whether any action executed the observed batch
+        plan: ``Observation.get`` BLOCKS until one completes, and with none
+        the batch was empty (zero violations). A quarantine write's seconds
+        land in ``timings["quarantine"]`` when ``timings`` is given.
+        Returns ``(violations, quarantine files)``; violations is None on a
+        table without constraints."""
+        cons, obs, q_df = checks
+        if not cons:
+            return None, []
+        violations = {n: 0 for n in cons}
+        if counted:
+            vm = obs.get
+            violations = {n: int(vm[f"v_{n}"] or 0) for n in cons}
+            failed = {
+                n: violations[n]
+                for n, c in cons.items()
+                if c["mode"] == "fail" and violations[n]
+            }
+            if failed:
+                raise ConstraintViolationError(epoch_id, failed)
+        q_files: list[str] = []
+        if q_df is not None and any(
+            violations[n] for n, c in cons.items() if c["mode"] == "quarantine"
+        ):
+            t0 = time.perf_counter()
+            q_files = self._write_quarantine(q_df, epoch_id)
+            if timings is not None:
+                timings["quarantine"] = round(time.perf_counter() - t0, 3)
+        # expectations event log: counts survive MergeStats (DLT parity)
+        self._append_constraint_metrics(epoch_id, violations)
+        return violations, q_files
+
+    def _append_lineage(self, epoch_id, lineage: dict, t0: float) -> float:
+        """Lineage phase of an epoch write: one lineage-log row per bucket
+        of ``lineage`` = ``{bucket: (applied, skipped, deleted, max_lsn)}``,
+        appended before the snapshot pointer flips (a crash here re-appends
+        on replay, and readers key lineage by epoch_key). A direct pyarrow
+        append: lineage is a handful of local rows per epoch, and a Spark
+        job would cost seconds of fixed overhead for a sub-KB file.
+        ``wall_secs`` is the time since ``t0``; returns it."""
+        now = datetime.now()
+        wall = round(time.perf_counter() - t0, 3)
+        bks = sorted(lineage)
+        if not bks:
+            return wall
+        n = len(bks)
+        applied, skipped, deleted, max_lsn = (
+            list(col) for col in zip(*(lineage[b] for b in bks))
+        )
+        write_log(
+            self.path,
+            LINEAGE_LOG,
+            _epoch_num(epoch_id),
+            {
+                "epoch_id": [_epoch_num(epoch_id)] * n,
+                "epoch_key": [_epoch_key(epoch_id)] * n,
+                "partition_id": bks,
+                "applied": applied,
+                "skipped": skipped,
+                "deleted": deleted,
+                "max_lsn": max_lsn,
+                "wall_secs": [wall] * n,
+                "committed_ts": [now] * n,
+            },
+        )
+        return wall
+
     def bootstrap(
         self,
         state: DataFrame,
@@ -4784,55 +4896,14 @@ class SnapshotTable(LakeTable):
             )
         nb = self.n_buckets
         key = list(self.key)
-        state = self._canonicalize_batch_columns(state)
-        state = self._apply_generated(state)
-        # CHECK constraints apply to the bulk load exactly as to a merge
-        # batch (same flags, same Observation riding the write job, deletes
-        # exempt): a table contract that only binds incremental epochs
-        # would be bypassable through the snapshot phase.
-        _cons = self._snapshot.get("constraints", {})
-        _c_obs = None
-        _q_names = [n for n, c in _cons.items() if c["mode"] == "quarantine"]
-        _q_df = None
-        if _cons:
-            _aug, _flags, _helpers = self._constraint_checks(state)
-            if _q_names:
-                _q_df = self._quarantine_df(_aug, _flags, _q_names, epoch_id)
-            _c_obs = Observation()
-            _aug = _aug.observe(
-                _c_obs,
-                *[
-                    F.sum(F.when(v, 1).otherwise(0)).alias(f"v_{n}")
-                    for n, v in _flags.items()
-                ],
-            )
-            _drop_flags = [
-                _flags[n]
-                for n, c in _cons.items()
-                if c["mode"] in ("drop", "quarantine")
-            ]
-            if _drop_flags:
-                _pred = _drop_flags[0]
-                for _p in _drop_flags[1:]:
-                    _pred = _pred | _p
-                _aug = _aug.filter(~_pred)
-            state = _aug.drop(*_helpers) if _helpers else _aug
-        has_op = "op" in state.columns
-        _dropped = set(self._snapshot.get("dropped_columns", []))
-        incoming = T.StructType(
-            [
-                f
-                for f in state.schema.fields
-                if f.name not in ("op", "_max_lsn") and f.name not in _dropped
-            ]
-        )
-        self._enforce_evolution_policy(incoming)
-        new_schema = merge_schemas(
-            self.schema, incoming, allow_widening=self.type_widening
-        )
+        # CHECK constraints, renames, generated columns and the evolution
+        # policy apply to the bulk load exactly as to a merge batch: a table
+        # contract that only binds incremental epochs would be bypassable
+        # through the snapshot phase.
+        state, new_schema, checks = self._admit(state, epoch_id)
         tomb = (
             (F.col("op") == F.lit("delete"))
-            if has_op
+            if "op" in state.columns
             else F.lit(False)
         )
         storage = T.StructType(
@@ -4854,7 +4925,7 @@ class SnapshotTable(LakeTable):
         # trick the commit's file_stats use. Tombstoned dump rows count as
         # applied (they were loaded); skipped is structurally 0.
         lsn_col = self.order[-1]
-        lin_by_bucket: dict[int, tuple[int, int | None]] = {}
+        lineage: dict[int, tuple[int, int, int, int | None]] = {}
         for bval, files in new_buckets.items():
             rows = 0
             mx = None
@@ -4867,56 +4938,14 @@ class SnapshotTable(LakeTable):
                 st = _file_order_stats(ap, lsn_col)
                 if st is not None and isinstance(st[1], int):
                     mx = st[1] if mx is None or st[1] > mx else mx
-            lin_by_bucket[int(bval)] = (rows, mx)
-        applied = sum(r for r, _ in lin_by_bucket.values())
-        lsn_vals = [m for _, m in lin_by_bucket.values() if m is not None]
+            lineage[int(bval)] = (rows, 0, 0, mx)
+        applied = sum(v[0] for v in lineage.values())
+        lsn_vals = [v[3] for v in lineage.values() if v[3] is not None]
         max_lsn = max(lsn_vals) if lsn_vals else None
 
-        # CHECK-constraint verdicts (counted by the write job above);
-        # fail-mode aborts before lineage + commit — the written files are
-        # uncommitted orphans, same as merge_changes
-        _violations: dict[str, int] = {}
-        if _cons:
-            _vm = _c_obs.get
-            _violations = {n: int(_vm[f"v_{n}"] or 0) for n in _cons}
-            _failed = {
-                n: _violations[n]
-                for n, c in _cons.items()
-                if c["mode"] == "fail" and _violations[n]
-            }
-            if _failed:
-                raise ConstraintViolationError(epoch_id, _failed)
-
-        # quarantine persist, gated on the write job's counts (same
-        # contract as merge_changes: registered by the commit below,
-        # orphaned on a crash before it, never re-run on a replay)
-        _q_files: list[str] = []
-        if _q_df is not None and any(_violations.get(n, 0) for n in _q_names):
-            _q_files = self._write_quarantine(_q_df, epoch_id)
-        if _cons:
-            self._append_constraint_metrics(epoch_id, _violations)
-
-        now = datetime.now()
-        wall = round(time.perf_counter() - t0, 3)
-        if lin_by_bucket:
-            bks = sorted(lin_by_bucket)
-            n = len(bks)
-            write_log(
-                self.path,
-                LINEAGE_LOG,
-                _epoch_num(epoch_id),
-                {
-                    "epoch_id": [_epoch_num(epoch_id)] * n,
-                    "epoch_key": [_epoch_key(epoch_id)] * n,
-                    "partition_id": bks,
-                    "applied": [lin_by_bucket[b][0] for b in bks],
-                    "skipped": [0] * n,
-                    "deleted": [0] * n,
-                    "max_lsn": [lin_by_bucket[b][1] for b in bks],
-                    "wall_secs": [wall] * n,
-                    "committed_ts": [now] * n,
-                },
-            )
+        # the write job above executed the observed plan: always counted
+        violations, q_files = self._settle(epoch_id, checks, counted=True)
+        wall = self._append_lineage(epoch_id, lineage, t0)
 
         def build(cur: dict) -> dict | None:
             if self.is_epoch_committed(epoch_id):
@@ -4929,7 +4958,7 @@ class SnapshotTable(LakeTable):
             return {
                 **cur,
                 "buckets": new_buckets,
-                **_with_epoch(cur, _epoch_key(epoch_id), new_schema, _q_files),
+                **_with_epoch(cur, _epoch_key(epoch_id), new_schema, q_files),
             }
 
         if self._commit("bootstrap", build) is None:
@@ -4937,7 +4966,7 @@ class SnapshotTable(LakeTable):
         return MergeStats(
             epoch_id, applied, 0, 0, max_lsn, was_noop=False,
             timings={"bootstrap": wall},
-            violations=_violations if _cons else None,
+            violations=violations,
         )
 
     def lookup(self, *key_values, columns: list[str] | None = None) -> DataFrame:
@@ -5205,68 +5234,12 @@ class SnapshotTable(LakeTable):
         key = list(self.key)
         order = list(self.order)
         bucket_col = key[0]
-        # sources lagging a rename_column deliver under the old name —
-        # map them onto the current schema before any schema work
-        batch = self._canonicalize_batch_columns(batch)
-        # generated columns the batch omits are computed here (map-side,
-        # fused); supplied ones are validated by their implicit gen_*
-        # fail constraint in the block below
-        batch = self._apply_generated(batch)
-
-        # ---- CHECK constraints: flags + counts ride the batch's own plan
-        # (Observation = CollectMetrics, map-side conditional sums — zero
-        # extra passes); drop/quarantine-mode rows are filtered BEFORE the
-        # pre-pass so bucket stats and the write see only kept rows.
-        # A caller's pre_stats are NOT filtered: they only drive the CoW
-        # affected-bucket superset, and a superset is correct (an untouched
-        # bucket rewrites to identical content). Quarantine violators are
-        # captured as a SEPARATE pre-observe plan, executed only if the
-        # write job's counts say any exist (see the verdicts block below).
-        _cons = self._snapshot.get("constraints", {})
-        _c_obs = None
-        _q_names = [n for n, c in _cons.items() if c["mode"] == "quarantine"]
-        _q_df = None
-        if _cons:
-            _aug, _flags, _helpers = self._constraint_checks(batch)
-            if _q_names:
-                _q_df = self._quarantine_df(_aug, _flags, _q_names, epoch_id)
-            _c_obs = Observation()
-            _aug = _aug.observe(
-                _c_obs,
-                *[
-                    F.sum(F.when(v, 1).otherwise(0)).alias(f"v_{n}")
-                    for n, v in _flags.items()
-                ],
-            )
-            _drop_flags = [
-                _flags[n]
-                for n, c in _cons.items()
-                if c["mode"] in ("drop", "quarantine")
-            ]
-            if _drop_flags:
-                _pred = _drop_flags[0]
-                for _p in _drop_flags[1:]:
-                    _pred = _pred | _p
-                _aug = _aug.filter(~_pred)
-            batch = _aug.drop(*_helpers) if _helpers else _aug
-
+        # A caller's pre_stats are NOT filtered by admission's drop/
+        # quarantine filter: they only drive the CoW affected-bucket
+        # superset, and a superset is correct (an untouched bucket rewrites
+        # to identical content).
+        batch, new_schema, checks = self._admit(batch, epoch_id)
         has_max_lsn = "_max_lsn" in batch.columns
-        # dropped names never re-evolve in: a batch still carrying a
-        # drop_column'd column must not re-add it (the schema-pinned read
-        # would resurrect the OLD values from retained files — see
-        # drop_column's field-id note)
-        _dropped = set(self._snapshot.get("dropped_columns", []))
-        incoming_schema = T.StructType(
-            [
-                f
-                for f in batch.schema.fields
-                if f.name not in ("op", "_max_lsn") and f.name not in _dropped
-            ]
-        )
-        self._enforce_evolution_policy(incoming_schema)
-        new_schema = merge_schemas(
-            self.schema, incoming_schema, allow_widening=self.type_widening
-        )
         value_cols = [f.name for f in new_schema.fields if f.name not in key]
 
         mor = self.mode == "mor"
@@ -5285,20 +5258,11 @@ class SnapshotTable(LakeTable):
         if not mor:
             pre = pre_stats
             if pre is None:
-                b = batch.withColumn("_bucket", _bucket_expr(bucket_col, nb))
-                lsn_col = "_max_lsn" if has_max_lsn else "lsn"
-                lsn_src = (
-                    F.col(lsn_col)
-                    if lsn_col in batch.columns
-                    else F.lit(None).cast("long")
-                )
-                pre = (
-                    b.groupBy("_bucket")
-                    .agg(
-                        F.count(F.lit(1)).alias("n_in"),
-                        F.max(lsn_src).alias("max_lsn"),
-                    )
-                    .collect()
+                pre = compute_bucket_stats(
+                    batch,
+                    bucket_col,
+                    nb,
+                    lsn_col="_max_lsn" if has_max_lsn else "lsn",
                 )
             affected = sorted(r["_bucket"] for r in pre)
             max_lsn_by_bucket = {r["_bucket"]: r["max_lsn"] for r in pre}
@@ -5409,17 +5373,9 @@ class SnapshotTable(LakeTable):
             )
 
         applied = skipped = deleted = 0
-        lin_by_bucket: dict[int, tuple[int, int, int]] = {}
-        # whether ANY action will have executed the (observed) batch plan:
-        # the write job (always under MoR; under CoW iff the affected set is
-        # non-empty), or the CoW batch-path pre-pass collect.
-        # Observation.get BLOCKS until an action completes — never read it
-        # when no action ran (then the batch was empty: zero violations).
-        _cons_counted = bool(_cons) and (
-            mor or bool(affected) or pre_stats is None
-        )
-        rel_dir = os.path.join("data", f"epoch={_epoch_num(epoch_id)}-{uuid.uuid4().hex[:8]}")
-        out_dir = os.path.join(self.path, rel_dir)
+        # bucket -> (applied, skipped, deleted, max_lsn); bucket -1 holds
+        # the whole epoch when CoW counts it as one
+        lin_by_bucket: dict[int, tuple[int, int, int, int | None]] = {}
         epoch_files: dict[str, list[str]] = {}  # this epoch's files per bucket
         if affected is None or affected:
             obs = None
@@ -5499,16 +5455,13 @@ class SnapshotTable(LakeTable):
                     "spark.sql.adaptive.coalescePartitions.enabled": "false",
                 }
             ):
-                (
+                epoch_files = self._write_buckets(
                     survivors.repartition(
                         nb if affected is None else max(len(affected), 1),
                         F.col("_bucket"),
-                    )
-                    .write.partitionBy("_bucket")
-                    .mode("overwrite")
-                    .parquet(out_dir)
+                    ),
+                    f"epoch={_epoch_num(epoch_id)}",
                 )
-            epoch_files = self._bucket_outputs(rel_dir)
             _timings["write"] = round(time.perf_counter() - _t0, 3)
             if mor:
                 # ---- per-bucket lineage from the epoch delta just written,
@@ -5521,10 +5474,9 @@ class SnapshotTable(LakeTable):
                     rows, dl, mx = _delta_lineage(
                         [os.path.join(self.path, f) for f in files]
                     )
-                    lin_by_bucket[int(b_)] = (rows - dl, 0, dl)
-                    max_lsn_by_bucket[int(b_)] = mx
+                    lin_by_bucket[int(b_)] = (rows - dl, 0, dl, mx)
                 affected = sorted(lin_by_bucket)
-                vals = [v for v in max_lsn_by_bucket.values() if v is not None]
+                vals = [v[3] for v in lin_by_bucket.values() if v[3] is not None]
                 if vals:
                     max_lsn = int(max(vals))
                 _timings["lineage_stats"] = round(time.perf_counter() - _t0, 3)
@@ -5536,52 +5488,32 @@ class SnapshotTable(LakeTable):
                 metrics = obs.get
                 for bk in affected:
                     a, sk, dl = metrics[f"a_{bk}"], metrics[f"s_{bk}"], metrics[f"d_{bk}"]
-                    lin_by_bucket[bk] = (int(a or 0), int(sk or 0), int(dl or 0))
+                    lin_by_bucket[bk] = (
+                        int(a or 0), int(sk or 0), int(dl or 0),
+                        max_lsn_by_bucket.get(bk),
+                    )
             else:
                 metrics = obs.get
                 lin_by_bucket[-1] = (
                     int(metrics["a_all"] or 0),
                     int(metrics["s_all"] or 0),
                     int(metrics["d_all"] or 0),
+                    max_lsn,
                 )
             applied = sum(v[0] for v in lin_by_bucket.values())
             skipped = sum(v[1] for v in lin_by_bucket.values())
             deleted = sum(v[2] for v in lin_by_bucket.values())
 
-        # ---- CHECK-constraint verdicts (counts came from the same job that
-        # wrote the data). fail-mode aborts HERE — after the write, before
-        # lineage and the snapshot commit — so nothing violating is ever
-        # visible; the orphaned files are vacuum's to reap, exactly like a
-        # crash between write and commit.
-        _violations: dict[str, int] = {}
-        if _cons_counted:
-            _vm = _c_obs.get
-            _violations = {n: int(_vm[f"v_{n}"] or 0) for n in _cons}
-            _failed = {
-                n: _violations[n]
-                for n, c in _cons.items()
-                if c["mode"] == "fail" and _violations[n]
-            }
-            if _failed:
-                raise ConstraintViolationError(epoch_id, _failed)
-        elif _cons:
-            _violations = {n: 0 for n in _cons}
-
-        # ---- quarantine persist: only when the write job's counts say a
-        # quarantine-mode constraint actually fired — violation-free epochs
-        # never pay the extra batch pass. Written BEFORE the snapshot
-        # commit; the commit registers the files, so a crash in between
-        # leaves unregistered orphans (vacuum's to reap) and a replayed
-        # committed epoch never double-quarantines (the top-of-merge
-        # was_noop short-circuit).
-        _q_files: list[str] = []
-        if _q_df is not None and any(_violations.get(n, 0) for n in _q_names):
-            _t0 = time.perf_counter()
-            _q_files = self._write_quarantine(_q_df, epoch_id)
-            _timings["quarantine"] = round(time.perf_counter() - _t0, 3)
-        if _cons:
-            # expectations event log: counts survive MergeStats (DLT parity)
-            self._append_constraint_metrics(epoch_id, _violations)
+        # ---- settlement: CHECK-constraint verdicts, counted by the same
+        # job that wrote the data. Some action executed the observed batch
+        # plan iff the write ran (always under MoR; under CoW iff the
+        # affected set is non-empty) or the CoW pre-pass collect did.
+        violations, q_files = self._settle(
+            epoch_id,
+            checks,
+            counted=mor or bool(affected) or pre_stats is None,
+            timings=_timings,
+        )
 
         stray = sorted(set(epoch_files) - {str(b_) for b_ in affected}, key=int)
         if stray:
@@ -5595,38 +5527,8 @@ class SnapshotTable(LakeTable):
                 f"mismatched bucket column or n_buckets"
             )
 
-        # ---- lineage append (before the snapshot pointer flips; a crash
-        # here re-appends on replay, and readers key lineage by epoch_key) ---
-        now = datetime.now()
-        wall = round(time.perf_counter() - _merge_t0, 3)
-        bks = sorted(lin_by_bucket)
-        n = len(bks)
         _t0 = time.perf_counter()
-        if bks:
-            # Direct pyarrow append: lineage is a handful of local rows per
-            # epoch; a Spark job (local relation -> python worker -> write
-            # task) costs seconds of fixed overhead for a sub-KB file.
-            write_log(
-                self.path,
-                LINEAGE_LOG,
-                _epoch_num(epoch_id),
-                {
-                    "epoch_id": [_epoch_num(epoch_id)] * n,
-                    "epoch_key": [_epoch_key(epoch_id)] * n,
-                    "partition_id": [int(bk) for bk in bks],
-                    "applied": [int(lin_by_bucket[bk][0]) for bk in bks],
-                    "skipped": [int(lin_by_bucket[bk][1]) for bk in bks],
-                    "deleted": [int(lin_by_bucket[bk][2]) for bk in bks],
-                    "max_lsn": [
-                        int(max_lsn_by_bucket[bk])
-                        if max_lsn_by_bucket.get(bk) is not None
-                        else (max_lsn if bk == -1 else None)
-                        for bk in bks
-                    ],
-                    "wall_secs": [wall] * n,
-                    "committed_ts": [now] * n,
-                },
-            )
+        self._append_lineage(epoch_id, lin_by_bucket, _merge_t0)
         _timings["lineage"] = round(time.perf_counter() - _t0, 3)
 
         # ---- atomic snapshot commit: data + schema + epoch in ONE rename ---
@@ -5638,8 +5540,9 @@ class SnapshotTable(LakeTable):
         # On a conflict (another writer won this version's CAS), MoR merges
         # REBASE: the epoch's delta files are pure appends, so they graft
         # onto the winner's bucket lists unchanged (schema re-merged, epoch
-        # set re-folded). CoW must raise — its rewrite was computed against
-        # a file set the winner may have replaced.
+        # set re-folded) — unless the winner resharded, which
+        # _append_buckets refuses. CoW must raise — its rewrite was computed
+        # against a file set the winner may have replaced.
         parent_v = self._snapshot["version"]
         affected_set = set(affected)
 
@@ -5659,17 +5562,24 @@ class SnapshotTable(LakeTable):
                     )
             # CoW replaces each affected bucket's file list (the rewrite
             # carried every surviving row); MoR appends the epoch's deltas
-            kept = cur["buckets"] if mor else {
-                b_: fs
-                for b_, fs in cur["buckets"].items()
-                if int(b_) not in affected_set
+            base = cur if mor else {
+                **cur,
+                "buckets": {
+                    b_: fs
+                    for b_, fs in cur["buckets"].items()
+                    if int(b_) not in affected_set
+                },
             }
             return {
                 **cur,
-                "buckets": _append_buckets(kept, epoch_files),
-                **_with_epoch(cur, _epoch_key(epoch_id), new_schema, _q_files),
+                "buckets": _append_buckets(base, epoch_files, nb),
+                **_with_epoch(cur, _epoch_key(epoch_id), new_schema, q_files),
             }
 
+        stats = MergeStats(
+            epoch_id, applied, skipped, deleted, max_lsn, was_noop=False,
+            timings=_timings, violations=violations,
+        )
         _t0 = time.perf_counter()
         if stage:
             # ---- write-audit-publish: persist the would-be snapshot under
@@ -5689,7 +5599,7 @@ class SnapshotTable(LakeTable):
                 "staged_mode": self.mode,
                 "staged_parent": parent_v,
                 "staged_added": {b: list(fs) for b, fs in epoch_files.items()},
-                "staged_quarantine": list(_q_files),
+                "staged_quarantine": list(q_files),
                 "staged_counts": [applied, skipped, deleted],
                 "staged_max_lsn": max_lsn,
             }
@@ -5698,17 +5608,8 @@ class SnapshotTable(LakeTable):
             os.makedirs(sdir, exist_ok=True)
             _durable_write(os.path.join(sdir, f"{ref}.json"), json.dumps(staged))
             _timings["stage"] = round(time.perf_counter() - _t0, 3)
-            return MergeStats(
-                epoch_id,
-                applied,
-                skipped,
-                deleted,
-                max_lsn,
-                was_noop=False,
-                timings=_timings,
-                violations=_violations if _cons else None,
-                staged_ref=ref,
-            )
+            stats.staged_ref = ref
+            return stats
         if self._commit("merge", build) is None:
             return MergeStats(epoch_id, 0, 0, 0, None, was_noop=True)
         _timings["commit"] = round(time.perf_counter() - _t0, 3)
@@ -5726,13 +5627,4 @@ class SnapshotTable(LakeTable):
             )
             if n:
                 _timings["compact"] = round(time.perf_counter() - _t0, 3)
-        return MergeStats(
-            epoch_id,
-            applied,
-            skipped,
-            deleted,
-            max_lsn,
-            was_noop=False,
-            timings=_timings,
-            violations=_violations if _cons else None,
-        )
+        return stats

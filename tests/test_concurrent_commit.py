@@ -148,3 +148,94 @@ def test_compaction_rebases_over_concurrent_append(spark, tmpdir_path):
     } - pre_compact_files
     assert late_files and late_files <= ref_files
     assert fresh.is_epoch_committed(9)
+
+
+# ---- merge-on-read appends racing a reshard: delta files bucketed under
+# one n_buckets must never graft onto a snapshot bucketed under another
+
+
+def _reshard_events(spark, epoch: int):
+    """One row per conversation c00..c11 (turn 0): epoch 0 inserts ``v0``,
+    epoch 1 updates every conversation to ``v1`` with a newer order."""
+    rows = [
+        (100 * epoch + i, "update", f"c{i:02d}", 0, "user", f"v{epoch}", None,
+         datetime(2024, 1, 1, epoch, 0, i))
+        for i in range(12)
+    ]
+    return spark.createDataFrame(rows, CHANGE_DDL)
+
+
+def _state(tbl):
+    return sorted((r.conv_id, r.turn_idx, r.text) for r in tbl.read().collect())
+
+
+def _oracle(epochs: int, deleted: set = frozenset()):
+    """Final state after ``epochs`` epochs of :func:`_reshard_events`,
+    minus the ``deleted`` conversations."""
+    return [
+        (f"c{i:02d}", 0, f"v{epochs - 1}")
+        for i in range(12)
+        if f"c{i:02d}" not in deleted
+    ]
+
+
+def _assert_bucket_ids_in_range(spark, path):
+    snap = SnapshotTable(spark, path)._snapshot
+    assert all(0 <= int(b) < int(snap["n_buckets"]) for b in snap["buckets"])
+
+
+def _stale_handle_over_reshard(spark, path):
+    """A 4-bucket MoR table holding epoch 0, a handle loaded at that state,
+    and a second handle that then reshards the table to 3 buckets."""
+    create_transcripts_table(spark, path, n_buckets=4, mode="mor")
+    apply_changes(SnapshotTable(spark, path), _reshard_events(spark, 0), epoch_id=0)
+    stale = SnapshotTable(spark, path)
+    SnapshotTable(spark, path).rebucket(3)
+    return stale
+
+
+def test_mor_merge_over_concurrent_rebucket_raises(spark, tmpdir_path):
+    path = tmpdir_path + "/t"
+    stale = _stale_handle_over_reshard(spark, path)
+    with pytest.raises(ConcurrentCommitError):
+        apply_changes(stale, _reshard_events(spark, 1), epoch_id=1)
+    _assert_bucket_ids_in_range(spark, path)
+    fresh = SnapshotTable(spark, path)
+    assert not fresh.is_epoch_committed(1)
+    apply_changes(fresh, _reshard_events(spark, 1), epoch_id=1)
+    assert _state(SnapshotTable(spark, path)) == _oracle(2)
+    _assert_bucket_ids_in_range(spark, path)
+
+
+def test_mor_delete_where_over_concurrent_rebucket_raises(spark, tmpdir_path):
+    path = tmpdir_path + "/t"
+    stale = _stale_handle_over_reshard(spark, path)
+    pred = "conv_id < 'c06'"
+    with pytest.raises(ConcurrentCommitError):
+        stale.delete_where(pred)
+    _assert_bucket_ids_in_range(spark, path)
+    assert _state(SnapshotTable(spark, path)) == _oracle(1)
+    assert SnapshotTable(spark, path).delete_where(pred) == 6
+    expected = _oracle(1, {f"c{i:02d}" for i in range(6)})
+    assert _state(SnapshotTable(spark, path)) == expected
+    _assert_bucket_ids_in_range(spark, path)
+
+
+def test_mor_merge_after_restore_across_reshard_raises(spark, tmpdir_path):
+    """restore() to a version with another n_buckets is a reshard too."""
+    path = tmpdir_path + "/t"
+    create_transcripts_table(spark, path, n_buckets=4, mode="mor")
+    writer = SnapshotTable(spark, path)
+    apply_changes(writer, _reshard_events(spark, 0), epoch_id=0)
+    four_buckets = writer._snapshot["version"]
+    writer.rebucket(3)
+    stale = SnapshotTable(spark, path)  # 3 buckets
+    SnapshotTable(spark, path).restore(four_buckets)
+    with pytest.raises(ConcurrentCommitError):
+        apply_changes(stale, _reshard_events(spark, 1), epoch_id=1)
+    _assert_bucket_ids_in_range(spark, path)
+    fresh = SnapshotTable(spark, path)
+    assert fresh.n_buckets == 4 and not fresh.is_epoch_committed(1)
+    apply_changes(fresh, _reshard_events(spark, 1), epoch_id=1)
+    assert _state(SnapshotTable(spark, path)) == _oracle(2)
+    _assert_bucket_ids_in_range(spark, path)

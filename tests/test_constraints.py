@@ -233,7 +233,8 @@ def test_constraint_metrics_event_log(spark, tmpdir_path):
     assert clone.constraint_metrics().count() == 3
 
 
-def test_bootstrap_enforces_same_contract(spark, tmpdir_path):
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_bootstrap_enforces_same_contract(spark, tmpdir_path, mode):
     schema = (
         "conv_id string, turn_idx int, role string, text string,"
         " tool string, ts timestamp_ntz, lsn long"
@@ -243,6 +244,7 @@ def test_bootstrap_enforces_same_contract(spark, tmpdir_path):
         tmpdir_path + "/tb",
         spark.createDataFrame([], schema).schema,
         n_buckets=2,
+        mode=mode,
     )
     tbl.add_constraint("pos_lsn", "lsn > 0", mode="drop")
     dump = spark.createDataFrame(
@@ -261,11 +263,58 @@ def test_bootstrap_enforces_same_contract(spark, tmpdir_path):
         tmpdir_path + "/tb2",
         dump.schema,
         n_buckets=2,
+        mode=mode,
     )
     t2.add_constraint("pos_lsn", "lsn > 0", mode="fail")
     with pytest.raises(ConstraintViolationError):
         t2.bootstrap(dump)
     assert t2.read().count() == 0 and not t2.is_epoch_committed("bootstrap-0")
+
+    # bootstrap and merge_changes admit and settle one batch the same way:
+    # a lagging renamed column maps in, a dropped column stays out, and
+    # the drop/quarantine verdicts, quarantine rows and metrics agree
+    def _twin(name):
+        t = SnapshotTable.create(
+            spark, f"{tmpdir_path}/{name}", dump.schema, n_buckets=2, mode=mode
+        )
+        t.rename_column("tool", "tool_name")
+        t.drop_column("role")
+        t.add_constraint("pos_lsn", "lsn > 0", mode="quarantine")
+        t.add_constraint("short_text", "length(text) < 3", mode="drop")
+        t.add_constraint("has_tool", "tool_name IS NOT NULL", mode="warn")
+        return t
+
+    batch = spark.createDataFrame(
+        [
+            ("update", "a", 1, "u", "x", "search", datetime(2024, 1, 1), 1),
+            ("update", "b", 2, "u", "y", None, datetime(2024, 1, 1), -4),
+            ("update", "c", 3, "u", "long", "calc", datetime(2024, 1, 1), 3),
+            ("update", "d", 4, "u", "z", None, datetime(2024, 1, 1), 4),
+        ],
+        "op string, " + schema,
+    )
+    boot, merged = _twin("boot"), _twin("merge")
+    st_b = boot.bootstrap(batch, epoch_id=0)
+    st_m = merged.merge_changes(batch, 0)
+    want = {"pos_lsn": 1, "short_text": 1, "has_tool": 2}
+    assert st_b.violations == st_m.violations == want
+    assert boot.schema == merged.schema
+    assert "tool_name" in boot.schema.fieldNames()
+    assert not {"tool", "role"} & set(boot.schema.fieldNames())
+
+    def _rows(df, drop=()):
+        df = df.drop(*drop)
+        return [tuple(r) for r in df.orderBy(*df.columns).collect()]
+
+    assert _rows(boot.read()) == _rows(merged.read())
+    assert {r.conv_id for r in boot.read().collect()} == {"a", "d"}
+    assert _rows(boot.constraint_metrics(), ["committed_ts"]) == _rows(
+        merged.constraint_metrics(), ["committed_ts"]
+    )
+    q_b, q_m = boot.read_quarantine(), merged.read_quarantine()
+    assert q_b.columns == q_m.columns
+    assert _rows(q_b) == _rows(q_m)
+    assert [r.conv_id for r in q_b.collect()] == ["b"]
 
 
 def test_quarantine_mode_persists_and_filters(spark, tmpdir_path):

@@ -131,6 +131,34 @@ def test_deep_check_catches_misbucketed_rows(spark, tmpdir_path):
     assert deep["bucket_mismatches"] > 0
 
 
+def test_shallow_check_catches_out_of_range_bucket_ids(spark, tmpdir_path):
+    """A bucket id outside [0, n_buckets) — files filed under another
+    layout, e.g. a delta grafted across a reshard — is a hard failure the
+    shallow (no Spark job) audit reports by itself."""
+    tbl = _seed(spark, tmpdir_path + "/t")
+    assert tbl.verify_integrity()["out_of_range_buckets"] == []
+    buckets = tbl._snapshot["buckets"]
+    stray = next(iter(buckets.values()))[0]
+    snap = {
+        **tbl._snapshot,
+        "version": tbl._snapshot["version"] + 1,
+        "parent": tbl._snapshot["version"],
+        "buckets": {**buckets, "4": [stray], "-1": [stray]},
+    }
+    tbl._write_snapshot(snap)
+    tbl._snapshot = snap
+    sc = spark.sparkContext
+    sc.setJobGroup("verify-shallow", "verify-shallow")
+    try:
+        rep = tbl.verify_integrity()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("verify-shallow") == []
+    assert not rep["ok"]
+    assert rep["out_of_range_buckets"] == ["-1", "4"]
+    assert rep["missing_files"] == [] and rep["schema_drift"] == []
+
+
 def test_uncommitted_lineage_is_reported_not_fatal(spark, tmpdir_path):
     tbl = _seed(spark, tmpdir_path + "/t")
     lin_dir = os.path.join(tbl.path, "lineage")
